@@ -32,7 +32,7 @@ def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lumbermill_spark import classify, parse
 
-    return parse.with_parsed(classify.classify(_transcripts(spark, sf_dir)), parser="pandas")
+    return parse.with_parsed(classify.classify(_transcripts(spark, sf_dir)))
 
 
 def entry(spark: SparkSession) -> DataFrame:

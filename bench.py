@@ -8,8 +8,7 @@ Prints ONE JSON line:
 so driver-round comparisons don't reflect single-run neighbor noise.
 
 The headline metric is the end-to-end parse→enrich→route→aggregate pipeline
-(noop sink — measures compute, not local-disk writeback), reported both with
-the pandas-UDF parser (north_star default) and the native-expression parser.
+(noop sink — measures compute, not local-disk writeback).
 """
 
 from __future__ import annotations
@@ -52,15 +51,15 @@ def main() -> None:
         timings[name] = ts[len(ts) // 2] if runs % 2 else round(sum(ts[len(ts) // 2 - 1 : len(ts) // 2 + 1]) / 2, 3)
         return timings[name]
 
-    def run_pipeline(parser):
-        cfg = pipeline.PipelineConfig(parser=parser, sink_format="noop", write_metrics=False)
+    def run_pipeline():
+        cfg = pipeline.PipelineConfig(sink_format="noop", write_metrics=False)
         return pipeline.run(spark, tpath, "/tmp/lm_bench_noop", cfg)
 
     # two JIT/codegen/python-worker warmup passes, then measured runs — one
     # is not enough when datagen just ran in-process (the first post-warmup
     # run still carries ~1.5x residue; same lesson as the scaling protocol)
-    run_pipeline("pandas")
-    run_pipeline("pandas")
+    run_pipeline()
+    run_pipeline()
     # the headline's runs are SPREAD across the whole bench (start / middle /
     # end) instead of back-to-back: host-noise phases are time-correlated
     # (minutes long), so three adjacent runs can all land in one — a spread
@@ -70,17 +69,10 @@ def main() -> None:
 
     def headline_once():
         t0 = time.time()
-        run_pipeline("pandas")
+        run_pipeline()
         headline_runs.append(round(time.time() - t0, 3))
 
     headline_once()
-    # each comparison parser gets its own warm pass first: its first run pays
-    # that parser's whole-stage-codegen compile, which is startup cost, not
-    # steady-state throughput
-    run_pipeline("native")
-    timed("pipeline_noop_native", lambda: run_pipeline("native"))
-    run_pipeline("native_fast")
-    timed("pipeline_noop_native_fast", lambda: run_pipeline("native_fast"))
 
     phase_timings: dict[str, float] = {}
 
@@ -90,7 +82,7 @@ def main() -> None:
 
         out = tempfile.mkdtemp(prefix="lm_bench_full_")
         try:
-            res = pipeline.run(spark, tpath, out, pipeline.PipelineConfig(parser="pandas"))
+            res = pipeline.run(spark, tpath, out, pipeline.PipelineConfig())
             for k, v in res.timings.items():
                 phase_timings[k] = min(v, phase_timings.get(k, v))
         finally:
@@ -101,13 +93,13 @@ def main() -> None:
     df = spark.read.parquet(tpath)
 
     def agg_counts():
-        p = parse.with_parsed(classify.classify(df), "pandas")
+        p = parse.with_parsed(classify.classify(df))
         aggregate.class_counts(p, p).collect()
 
     timed("class_counts", agg_counts)
 
     def rollup():
-        p = parse.with_parsed(classify.classify(df), "pandas")
+        p = parse.with_parsed(classify.classify(df))
         aggregate.router_rollup(parse.sink_router(p)).write.format("noop").mode("overwrite").save()
 
     timed("router_rollup", rollup)

@@ -1,5 +1,5 @@
 """Interleaved A/B of spark.sql.execution.arrow.maxRecordsPerBatch on the
-pinned 8-core sf1 parse stage (pandas parser — the only path that crosses
+pinned 8-core sf1 parse stage (the parse UDF — the only path that crosses
 the Arrow boundary).
 
 Round 4's ladder suggested 20k might beat 10k (19.8 vs 21.6 s medians) but
@@ -38,7 +38,7 @@ def main() -> None:
     df = classify.classify(spark.read.parquet(tpath))
 
     def one() -> float:
-        p = parse.with_parsed(df, "pandas").select("p.*")
+        p = parse.with_parsed(df).select("p.*")
         t0 = time.time()
         p.agg(
             F.sum("status"), F.sum("service"), F.sum(F.length("error_code")),

@@ -31,7 +31,7 @@ def main() -> None:
     df = classify.classify(spark.read.parquet(tpath))
 
     def one() -> float:
-        p = parse.with_parsed(df, "pandas").select("p.*")
+        p = parse.with_parsed(df).select("p.*")
         t0 = time.time()
         p.agg(
             F.sum("status"), F.sum("service"), F.sum(F.length("source")),

@@ -12,7 +12,6 @@ cd "$(dirname "$0")/.."
 
 SF="${1:-1}"
 RUNS="${2:-4}"
-PARSERS="${3:-pandas,native}"
 
 rm -f /tmp/lumbermill_spark.zip
 zip -qr /tmp/lumbermill_spark.zip lumbermill_spark
@@ -32,7 +31,7 @@ run_one() {
     --conf spark.ui.enabled=false \
     --conf spark.ui.showConsoleProgress=false \
     --py-files /tmp/lumbermill_spark.zip \
-    bench/scaling_job.py "$SF" "$RUNS" "$PARSERS" 2>/dev/null | tail -1
+    bench/scaling_job.py "$SF" "$RUNS" 2>/dev/null | tail -1
 }
 
 for cores in ${LUMBERMILL_CORES:-2 8 32}; do

@@ -4,8 +4,8 @@ for the north_rule's N vs 4N executor criterion — see BASELINE.md protocol).
 
 Usage (via spark-submit so the run shape matches a real cluster submit):
   spark-submit --master local[8]  --py-files lumbermill_spark.zip bench/scaling_job.py <sf> <runs>
-Prints one JSON line: {"cores": c, "turns": n, "runs": [sec...], "best_sec": s,
-"turns_per_sec": t}
+Prints one JSON line: {"cores": c, "turns": n, "runs": [sec...],
+"median_sec": m, "best_sec": s, "turns_per_sec_median": t, "turns_per_sec_best": b}
 """
 
 from __future__ import annotations
@@ -33,15 +33,8 @@ def main() -> None:
     tpath = datagen.ensure_transcripts(sf)
     n_turns = spark.read.parquet(tpath).count()
 
-    route_shuffle = os.environ.get("LUMBERMILL_ROUTE_SHUFFLE", "1") != "0"
-
-    def one_run(parser):
-        cfg = pipeline.PipelineConfig(
-            parser=parser,
-            sink_format="noop",
-            write_metrics=False,
-            route_shuffle=route_shuffle,
-        )
+    def one_run():
+        cfg = pipeline.PipelineConfig(sink_format="noop", write_metrics=False)
         t0 = time.time()
         pipeline.run(spark, tpath, "/tmp/lm_scaling_noop", cfg)
         return round(time.time() - t0, 3)
@@ -51,24 +44,23 @@ def main() -> None:
         m = len(s) // 2
         return s[m] if len(s) % 2 else round((s[m - 1] + s[m]) / 2, 3)
 
-    parsers = (sys.argv[3].split(",") if len(sys.argv) > 3 else ["pandas", "native"])
     warmups = int(os.environ.get("LUMBERMILL_WARMUPS", "2"))
-    out = {"cores": cores, "turns": n_turns}
-    for parser in parsers:
-        # two warmups by default: JIT + codegen cache + python workers + OS
-        # page cache — measured: the first post-warmup run still carries
-        # ~1.5x residue with only one
-        for _ in range(warmups):
-            one_run(parser)
-        secs = [one_run(parser) for _ in range(runs)]
-        med = median(secs)
-        out[parser] = {
-            "runs": secs,
-            "median_sec": med,
-            "best_sec": min(secs),
-            "turns_per_sec_median": round(n_turns / med, 1),
-            "turns_per_sec_best": round(n_turns / min(secs), 1),
-        }
+    # two warmups by default: JIT + codegen cache + python workers + OS
+    # page cache — measured: the first post-warmup run still carries
+    # ~1.5x residue with only one
+    for _ in range(warmups):
+        one_run()
+    secs = [one_run() for _ in range(runs)]
+    med = median(secs)
+    out = {
+        "cores": cores,
+        "turns": n_turns,
+        "runs": secs,
+        "median_sec": med,
+        "best_sec": min(secs),
+        "turns_per_sec_median": round(n_turns / med, 1),
+        "turns_per_sec_best": round(n_turns / min(secs), 1),
+    }
     print(json.dumps(out))
     spark.stop()
 

@@ -49,32 +49,26 @@ def build_registry(spark, sf_dir, sf):
 
     q("pipeline_noop_pandas", lambda: pipeline.run(
         spark, tpath, "/tmp/lm_bx_noop",
-        pipeline.PipelineConfig(parser="pandas", sink_format="noop", write_metrics=False)))
-    q("pipeline_noop_native", lambda: pipeline.run(
-        spark, tpath, "/tmp/lm_bx_noop",
-        pipeline.PipelineConfig(parser="native", sink_format="noop", write_metrics=False)))
-    q("pipeline_noop_native_fast", lambda: pipeline.run(
-        spark, tpath, "/tmp/lm_bx_noop",
-        pipeline.PipelineConfig(parser="native_fast", sink_format="noop", write_metrics=False)))
+        pipeline.PipelineConfig(sink_format="noop", write_metrics=False)))
 
     def run_full_sink():
         import shutil
         import tempfile
         out = tempfile.mkdtemp(prefix="lm_bx_full_")
         try:
-            pipeline.run(spark, tpath, out, pipeline.PipelineConfig(parser="pandas"))
+            pipeline.run(spark, tpath, out, pipeline.PipelineConfig())
         finally:
             shutil.rmtree(out, ignore_errors=True)
 
     q("pipeline_parquet_sink", run_full_sink)
 
     def agg_counts():
-        p = parse.with_parsed(classify.classify(df), "pandas")
+        p = parse.with_parsed(classify.classify(df))
         aggregate.class_counts(p, p).collect()
 
     q("class_counts", agg_counts)
     q("router_rollup", lambda: aggregate.router_rollup(
-        parse.sink_router(parse.with_parsed(classify.classify(df), "pandas"))))
+        parse.sink_router(parse.with_parsed(classify.classify(df)))))
 
     q("dedup_exact", lambda: dedup.exact_dedup(dedup.augmented_docs(docs)))
     q("dedup_minhash_lsh", lambda: dedup.minhash_lsh_pairs(dedup.augmented_docs(docs)))

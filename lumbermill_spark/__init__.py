@@ -17,7 +17,7 @@ Modules
 schemas    transcripts schema + the 5 sink schemas (points.go:16-25)
 datagen    deterministic, vectorized synthetic transcripts (formats from lpxgen)
 classify   native-expression classification tree (drain.go:96-274 precedence)
-parse      vectorized pandas-UDF field extraction + native-expression variant
+parse      vectorized Arrow-UDF field extraction (RE2 over Arrow arrays)
 route      salted repartition, md5 bucket routing, FNV-1a consistent-hash ring
 aggregate  class counts, per-code counts, percentile rollups, freshness
 lineage    per-partition lineage ledger + resumable chunked runs

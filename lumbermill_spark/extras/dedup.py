@@ -451,8 +451,11 @@ def minhash_signatures(docs: DataFrame, impl: str = "arrow") -> DataFrame:
     (tests/test_dedup_golden.py), slower."""
     d = _widen(docs.select("doc_id", "text"))
     if impl == "native":
+        # NULL text → NULL shingles → NULL sig, as the arrow kernel returns;
+        # ungated, the fold sees [NULL] shingles and yields an all-P sig
+        # that would band every NULL-text doc together
         return (
-            d.withColumn("shingles", F.expr(SHINGLES_EXPR))
+            d.withColumn("shingles", F.when(F.col("text").isNotNull(), F.expr(SHINGLES_EXPR)))
             .withColumn("sig", F.expr(MINHASH_SIG_EXPR))
             .drop("text")
         )
@@ -637,11 +640,15 @@ def _simhash_bands_from_xs(xs: pd.Series) -> pd.Series:
     than half the tokens carry bit j (2*ones_j > n ⟺ the ±1 fold's acc[j] >
     0), packed into 4 × 16-bit band ints. Exact integer math — same values
     as _SIMHASH_BANDS_EXPR (golden-tested) without the interpreted
-    64-lambda-per-token Catalyst fold (~30 µs/token measured at sf0.1)."""
+    64-lambda-per-token Catalyst fold (~30 µs/token measured at sf0.1).
+    NULL text (split → NULL xs) gives NULL bands, as the SQL fold does."""
     shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
     weights = np.int64(1) << np.arange(16, dtype=np.int64)
     out = []
     for x in xs:
+        if x is None:
+            out.append(None)
+            continue
         a = np.asarray(x, dtype=np.int64)
         n = a.size
         if n == 0:

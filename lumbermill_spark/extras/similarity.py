@@ -24,6 +24,9 @@ LSH_TOPK = 3
 N_QUERIES = 8
 N_QUERIES_LSH = 32
 IVF_CENTROIDS = 16  # vec_id 0..15 serve as deterministic coarse centroids
+# cap on the centroid table _centroid_scores collects to the driver and
+# inlines as plan literals (every caller here uses IVF_CENTROIDS cells)
+MAX_CENTROIDS = 1024
 IVF_NPROBE = 2
 IVF_TOPK = 3
 N_QUERIES_IVF = 24
@@ -86,9 +89,13 @@ def _centroid_scores(centroids: DataFrame) -> Column:
     inlined as a constant array of (neg-cosine, cid) score structs per row:
     ascending struct order == (csim DESC, cid ASC), exactly the old
     row_number ordering (negation is a sign flip, bit-exact). cid keeps its
-    source column type so downstream schemas are unchanged."""
+    source column type so downstream schemas are unchanged. Raises
+    ValueError past MAX_CENTROIDS rows; the collect is capped just above it."""
     cid_t = centroids.schema["cid"].dataType
-    rows = sorted(centroids.select("cid", "cv").collect(), key=lambda r: r["cid"])
+    rows = centroids.select("cid", "cv").limit(MAX_CENTROIDS + 1).collect()
+    if len(rows) > MAX_CENTROIDS:
+        raise ValueError(f"centroid table has more than MAX_CENTROIDS={MAX_CENTROIDS} rows")
+    rows = sorted(rows, key=lambda r: r["cid"])
     cents = F.array(
         *[
             F.struct(

@@ -10,6 +10,7 @@ the single source of truth for both sides (oracle built in oracle_extras.py).
 from __future__ import annotations
 
 import pandas
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -52,15 +53,22 @@ def _post_shuffle(df: DataFrame) -> bool:
     """True when the analyzed plan contains an aggregate/join/window/
     repartition/checkpoint — the frame's partitioning was already decided by
     an exchange (e.g. rendered conversations out of render_conversations'
-    groupBy), so widening it again would only add a useless shuffle."""
-    stack = [df._jdf.queryExecution().analyzed()]
-    while stack:
-        node = stack.pop()
-        if node.nodeName() in _BOUNDARY_NODES:
-            return True
-        ch = node.children()
-        for i in range(ch.size()):
-            stack.append(ch.apply(i))
+    groupBy), so widening it again would only add a useless shuffle.
+
+    The walk goes through private JVM plan APIs (absent under Spark Connect,
+    free to change between releases); if it fails, answer True — "do not
+    widen" — the same fallback _widen takes when inputFiles() fails."""
+    try:
+        stack = [df._jdf.queryExecution().analyzed()]
+        while stack:
+            node = stack.pop()
+            if node.nodeName() in _BOUNDARY_NODES:
+                return True
+            ch = node.children()
+            for i in range(ch.size()):
+                stack.append(ch.apply(i))
+    except (AttributeError, Py4JError):
+        return True
     return False
 
 
@@ -129,6 +137,16 @@ def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _require_absent(df: DataFrame, names) -> None:
+    """The staged temp columns are dropped on the way out; a caller column
+    of the same name would be silently overwritten and then dropped.
+    Compared case-insensitively, as Spark resolves column names."""
+    have = {c.lower() for c in df.columns}
+    for c in names:
+        if c.lower() in have:
+            raise ValueError(f"input already has a column {c!r}, which this operator uses internally")
+
+
 def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality score ∈ [0,1]: alpha density, low punctuation, stopword
     presence, length — the standard cheap pre-filter for corpus curation."""
@@ -158,6 +176,7 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
         "_q_stop": F.regexp_count(F.lower(t), F.lit(stopword_pat("en"))).cast("double"),
         "_q_ntok": ntok,
     }
+    _require_absent(df, temps)
     df = df.withColumns(temps)
     alpha_ratio = F.col("_q_alpha")
     punct_ratio = F.col("_q_punct")
@@ -180,6 +199,7 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
 def with_langid(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Stopword-hit language ID with fixed-precedence argmax ('und' if no
     hits anywhere)."""
+    _require_absent(df, ("_lc",))
     df = _widen(df)
     # STAGED evaluation (see with_quality): lower(text) once, each lang's
     # regexp_count once as a column; the argmax when-chain reads attributes.

@@ -1,7 +1,7 @@
-"""Field extraction: ONE vectorized pandas/Arrow UDF (default) or a pure
-native-expression variant, producing a single wide ``p`` struct so the whole
-input is parsed in one pass and the five sinks are cheap filters+projections
-over one cached DataFrame — the Spark analog of the reference's fused
+"""Field extraction: ONE vectorized Arrow UDF (RE2 over Arrow string arrays),
+producing a single wide ``p`` struct so the whole input is parsed in one
+pass and the five sinks are cheap filters+projections over one cached
+DataFrame — the Spark analog of the reference's fused
 scan→parse→classify loop (drain.go:96-274).
 
 Semantics replicated per class (the asymmetric error policies of SURVEY §7.4):
@@ -33,24 +33,23 @@ whitespace or '='* could be misattributed (the reference scanner tokenizes
 quotes first). Such rows are detected (schemas.ADVERSARIAL_RX) and parsed
 with the quote-parity-prefixed patterns (schemas.quote_aware) that only let
 a key match start after an even number of quotes; all other rows take the
-fast patterns, which are provably identical to the scanner there. All
-three parsers dispatch PER ROW (the Arrow parser re-extracts just the
-flagged rows after its fast/mega pass — a sprinkle of adversarial rows
-costs only those rows the parity crawl, never their whole batch slice).
+fast patterns, which are provably identical to the scanner there. The
+dispatch is PER ROW (the parser re-extracts just the flagged rows after its
+fast/mega pass — a sprinkle of adversarial rows costs only those rows the
+parity crawl, never their whole batch slice).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from . import schemas as S
 
 # ---------------------------------------------------------------------------
-# pandas-UDF parser (compiled-regex, Arrow-batched; the north_star default)
+# Arrow-UDF parser (RE2 regexes over Arrow batches)
 # ---------------------------------------------------------------------------
 
 import pyarrow as pa
@@ -178,9 +177,8 @@ def _unquote_arr(q: "pa.Array") -> "pa.Array":
 def _qb(s: "pa.Array", unquote: bool = False) -> "pa.Array":
     """Quoted-or-bare value from an extract struct with (q, b) groups. RE2
     leaves non-participating alternation groups as '' (not null), so the rule
-    is 'quoted group if non-empty, else bare group' — identical to the native
-    parser's when(g1 != '', g1) and the DuckDB oracle's CASE (all three
-    agree, including on quoted-empty → ''). With ``unquote`` the QUOTED
+    is 'quoted group if non-empty, else bare group' — identical to the DuckDB
+    oracle's CASE (both agree on quoted-empty → ''). With ``unquote`` the QUOTED
     branch is escape-decoded per the full unquote.go table
     (schemas.ESCAPE_TABLE + \\uXXXX, see _decode_escapes_py); bare values are
     never decoded (scanner.go only unquotes qvalue tokens)."""
@@ -423,558 +421,6 @@ def parse_fields_udf(cls_id: pa.Array, text: pa.Array) -> pa.Array:
     return pa.StructArray.from_arrays(list(cols.values()), names=list(cols.keys()))
 
 
-# ---------------------------------------------------------------------------
-# native-expression parser (pure Catalyst/codegen; used for benchmarking the
-# "stay JVM-side" alternative — same semantics, same shared regexes)
-# ---------------------------------------------------------------------------
-
-
-def _adv(text: Column) -> Column:
-    """Row needs the quote-parity patterns (see schemas.ADVERSARIAL_RX).
-    The contains() prefilter is redundant with the pattern (every alternative
-    starts with the `="` literal) but skips the java-regex scan entirely for
-    the ~40% of rows with no quoted span at all (canonical mem/load/error
-    lines)."""
-    return text.contains('="') & text.rlike(S.ADVERSARIAL_RX)
-
-
-def _odd_quotes_expr(text: Column) -> Column:
-    """Unterminated-string detection: odd count of span-DELIMITING quotes.
-    Escaped quotes don't delimit (scanner.go qvalue skips `\\x` as one unit),
-    so rows carrying a backslash strip those pairs first; the contains() gate
-    keeps the regexp off the hot path (CaseWhen branches evaluate lazily)."""
-
-    def parity(t):
-        # literal replace, not regexp_replace — no java.util.regex for a
-        # 1-char count
-        return (F.length(t) - F.length(F.replace(t, F.lit('"'), F.lit("")))) % 2 == 1
-
-    return F.when(
-        text.contains("\\"), parity(F.regexp_replace(text, S.UNQUOTE_RX, ""))
-    ).otherwise(parity(text))
-
-
-def _nat_int1(text: Column, pat: str, present_pat: str) -> tuple[Column, Column]:
-    raw = F.regexp_extract(text, pat, 1)
-    v = F.when(raw != "", raw.cast("int"))
-    # isNull FIRST: && short-circuits in codegen, so the present-probe regex
-    # (a second full-line java-regex scan per key) only runs on rows whose
-    # extraction already failed — on a canonical corpus that's ~never,
-    # vs 4 unconditional probe scans per router row the other way around
-    bad = v.isNull() & text.rlike(present_pat)
-    return F.coalesce(v, F.lit(0)), bad
-
-
-def _decode_escapes_expr(c: Column) -> Column:
-    """Sentinel-chained unquote for the pure-expression engines — the full
-    single-char table of unquote.go:86-119 with invalid escapes (incl. \\u)
-    decoding literally; see schemas.ESCAPE_CHAIN for the equality argument.
-    Literal F.replace passes, java regex only for the final invalid-pair
-    strip — and the decode only ever runs on the QA family's quoted branch."""
-    for frm, to in S.ESCAPE_CHAIN:
-        c = F.replace(c, F.lit(frm), F.lit(to))
-    c = F.regexp_replace(c, S.UNQUOTE_RX, "$1")
-    return F.replace(c, F.lit(S.ESCAPE_SENTINEL), F.lit("\\"))
-
-
-def _nat_str1(text: Column, pat: str, unquote: bool) -> Column:
-    g1 = F.regexp_extract(text, pat, 1)
-    g2 = F.regexp_extract(text, pat, 2)
-    # only the QUOTED branch is escape-decoded (scanner.go unquotes qvalue
-    # tokens only; bare values keep their bytes)
-    g1v = _decode_escapes_expr(g1) if unquote else g1
-    return F.when(g1 != "", g1v).otherwise(g2)
-
-
-def _nat_float1(text: Column, pat: str) -> Column:
-    raw = F.regexp_extract(text, pat, 1)
-    return F.coalesce(F.when(raw != "", raw.cast("double")), F.lit(0.0))
-
-
-def _native_struct(msg_class: Column, text: Column, qa: bool) -> Column:
-    """The full parsed struct from ONE pattern family: quote-parity patterns
-    (qa=True — adversarial rows) or the plain fast patterns (qa=False — rows
-    with no unsafe quoted span, where the two families are provably equal).
-    The per-row family dispatch lives in the CALLER as a single top-level
-    CaseWhen: building each branch from one family keeps the generated code
-    per branch at half the size of the old per-key when(adv) weave and
-    evaluates the adversarial rlike exactly once per row — the old shape
-    cost native_fast +52% at sf0.1 (round-3 verdict, wrong #1)."""
-
-    def ipat(d_fast, d_qa, key):
-        return (d_qa if qa else d_fast)[key]
-
-    odd_quotes = _odd_quotes_expr(text)
-    is_router = msg_class == S.CLS_ROUTER
-
-    router_bad = F.lit(False)
-    ints = {}
-    for key in ("connect", "service", "status", "bytes"):
-        v, bad = _nat_int1(
-            text,
-            ipat(S.ROUTER_INT_KEYS, S.ROUTER_INT_KEYS_QA, key),
-            ipat(S.PAT_ROUTER_PRESENT, S.PAT_ROUTER_PRESENT_QA, key),
-        )
-        ints[key] = v
-        router_bad = router_bad | bad
-
-    code2 = F.substring(text, len(S.SENTINEL_DYNO_ERROR) + 1, 2)
-    ecode_ok = code2.rlike(r"^(\d\d|[+-]\d)$")
-
-    is_mem = msg_class == S.CLS_DYNO_MEM
-    is_load = msg_class == S.CLS_DYNO_LOAD
-    is_rerr = msg_class == S.CLS_ROUTER_ERROR
-    is_derr = msg_class == S.CLS_DYNO_ERROR
-    logfmt_cls = is_router | is_rerr | is_mem | is_load
-
-    pat_code = S.PAT_CODE_QA if qa else S.PAT_CODE
-    pat_source = S.PAT_SOURCE_QA if qa else S.PAT_SOURCE
-
-    def memf(key):
-        return _nat_float1(text, ipat(S.MEM_FLOAT_KEYS, S.MEM_FLOAT_KEYS_QA, key))
-
-    def memi(key):
-        # dyno_mem int errors are swallowed (dyno_msg.go:66-69): present-but-
-        # bad never drops, so the presence probe is skipped entirely
-        return _nat_int1(text, ipat(S.MEM_INT_KEYS, S.MEM_INT_KEYS_QA, key), "x^")[0]
-
-    def loadf(key):
-        return _nat_float1(text, ipat(S.LOAD_KEYS, S.LOAD_KEYS_QA, key))
-
-    return F.struct(
-        F.when(is_router, ints["status"]).otherwise(F.lit(0)).cast("int").alias("status"),
-        F.when(is_router, ints["service"]).otherwise(F.lit(0)).cast("int").alias("service"),
-        F.when(is_rerr, _nat_str1(text, pat_code, unquote=qa)).otherwise(F.lit("")).alias("error_code"),
-        F.when(is_derr & ecode_ok, code2.cast("int")).otherwise(F.lit(0)).cast("int").alias("dyno_ecode"),
-        F.when(is_mem | is_load, _nat_str1(text, pat_source, unquote=qa)).otherwise(F.lit("")).alias("source"),
-        F.when(is_mem, memf("memory_cache")).otherwise(F.lit(0.0)).alias("memory_cache"),
-        F.when(is_mem, memi("memory_pgpgin")).otherwise(F.lit(0)).cast("int").alias("memory_pgpgin"),
-        F.when(is_mem, memi("memory_pgpgout")).otherwise(F.lit(0)).cast("int").alias("memory_pgpgout"),
-        F.when(is_mem, memf("memory_rss")).otherwise(F.lit(0.0)).alias("memory_rss"),
-        F.when(is_mem, memf("memory_swap")).otherwise(F.lit(0.0)).alias("memory_swap"),
-        F.when(is_mem, memf("memory_total")).otherwise(F.lit(0.0)).alias("memory_total"),
-        F.when(is_load, loadf("load_avg_1m")).otherwise(F.lit(0.0)).alias("load_avg_1m"),
-        F.when(is_load, loadf("load_avg_5m")).otherwise(F.lit(0.0)).alias("load_avg_5m"),
-        F.when(is_load, loadf("load_avg_15m")).otherwise(F.lit(0.0)).alias("load_avg_15m"),
-        (
-            (logfmt_cls & odd_quotes)
-            | (is_router & router_bad)
-            | (is_derr & ~ecode_ok)
-        ).alias("parse_error"),
-    )
-
-
-def parse_fields_native(msg_class: Column, text: Column) -> Column:
-    """ONE top-level dispatch: the adversarial rlike runs once per row and
-    selects a whole single-family struct (CaseWhen branches evaluate lazily,
-    so safe rows never touch the quote-parity patterns)."""
-    return F.when(_adv(text), _native_struct(msg_class, text, qa=True)).otherwise(
-        _native_struct(msg_class, text, qa=False)
-    )
-
-
-def with_parsed_native(df: DataFrame) -> DataFrame:
-    """DataFrame-level native parser with the SAME attribute-column shape
-    that fixed native_fast (see with_parsed_native_fast): whole-stage-codegen
-    subexpression elimination skips CaseWhen branches, so the column-level
-    form re-ran each key's full-line regexp_extract 3-4× per row (once in
-    the `raw != ""` probe, once in the branch value, again via router_bad).
-    Staging every fast-family extraction as its own class-gated projection
-    column makes the struct assembly reference cheap ATTRIBUTES; the regex
-    per key runs exactly once per row of its class. The rare adversarial
-    rows still take the inline quote-parity struct, exactly as before —
-    semantics pinned by tests/test_parse_golden.py + the hypothesis fuzz."""
-
-    def build():
-        text, mc = F.col("text"), F.col("msg_class")
-        is_router = mc == S.CLS_ROUTER
-        is_mem = mc == S.CLS_DYNO_MEM
-        is_load = mc == S.CLS_DYNO_LOAD
-        is_rerr = mc == S.CLS_ROUTER_ERROR
-
-        inter: dict[str, Column] = {}
-        for key, pat in S.ROUTER_INT_KEYS.items():
-            inter["_ng_" + key] = F.when(is_router, F.regexp_extract(text, pat, 1))
-        for key, pat in S.MEM_FLOAT_KEYS.items():
-            inter["_ng_" + key] = F.when(is_mem, F.regexp_extract(text, pat, 1))
-        for key, pat in S.MEM_INT_KEYS.items():
-            inter["_ng_" + key] = F.when(is_mem, F.regexp_extract(text, pat, 1))
-        for key, pat in S.LOAD_KEYS.items():
-            inter["_ng_" + key] = F.when(is_load, F.regexp_extract(text, pat, 1))
-        # quoted-or-bare string keys: both capture groups staged
-        inter["_ng1_code"] = F.when(is_rerr, F.regexp_extract(text, S.PAT_CODE, 1))
-        inter["_ng2_code"] = F.when(is_rerr, F.regexp_extract(text, S.PAT_CODE, 2))
-        gate_src = is_mem | is_load
-        inter["_ng1_source"] = F.when(gate_src, F.regexp_extract(text, S.PAT_SOURCE, 1))
-        inter["_ng2_source"] = F.when(gate_src, F.regexp_extract(text, S.PAT_SOURCE, 2))
-
-        qa = _native_struct(mc, text, qa=True)
-        p = F.when(_adv(text), qa).otherwise(_native_struct_from_cols(mc, text))
-        return inter, p
-
-    inter, p = _cached_exprs("native_cols", build)
-    return df.withColumns(dict(inter)).withColumn("p", p).drop(*inter.keys())
-
-
-def _native_struct_from_cols(msg_class: Column, text: Column) -> Column:
-    """The fast-family struct assembled from the `_ng*` attribute columns
-    laid down by with_parsed_native — value-identical to
-    _native_struct(qa=False) (same patterns, same casts, same drop/zero
-    policies), but every raw extraction is referenced as an attribute."""
-    odd_quotes = _odd_quotes_expr(text)
-    is_router = msg_class == S.CLS_ROUTER
-
-    router_bad = F.lit(False)
-    ints = {}
-    for key in ("connect", "service", "status", "bytes"):
-        raw = F.col("_ng_" + key)
-        v = F.when(raw != "", raw.cast("int"))
-        # isNull FIRST (same short-circuit as _nat_int1): the present-probe
-        # regex only runs on rows whose extraction already failed
-        bad = v.isNull() & text.rlike(S.PAT_ROUTER_PRESENT[key])
-        ints[key] = F.coalesce(v, F.lit(0))
-        router_bad = router_bad | bad
-
-    code2 = F.substring(text, len(S.SENTINEL_DYNO_ERROR) + 1, 2)
-    ecode_ok = code2.rlike(r"^(\d\d|[+-]\d)$")
-
-    is_mem = msg_class == S.CLS_DYNO_MEM
-    is_load = msg_class == S.CLS_DYNO_LOAD
-    is_rerr = msg_class == S.CLS_ROUTER_ERROR
-    is_derr = msg_class == S.CLS_DYNO_ERROR
-    logfmt_cls = is_router | is_rerr | is_mem | is_load
-
-    def ffloat(key):
-        raw = F.col("_ng_" + key)
-        return F.coalesce(F.when(raw != "", raw.cast("double")), F.lit(0.0))
-
-    def fint_swallow(key):
-        raw = F.col("_ng_" + key)
-        return F.coalesce(F.when(raw != "", raw.cast("int")), F.lit(0))
-
-    def fstr(key):
-        g1, g2 = F.col("_ng1_" + key), F.col("_ng2_" + key)
-        return F.when(g1 != "", g1).otherwise(g2)
-
-    return F.struct(
-        F.when(is_router, ints["status"]).otherwise(F.lit(0)).cast("int").alias("status"),
-        F.when(is_router, ints["service"]).otherwise(F.lit(0)).cast("int").alias("service"),
-        F.when(is_rerr, fstr("code")).otherwise(F.lit("")).alias("error_code"),
-        F.when(is_derr & ecode_ok, code2.cast("int")).otherwise(F.lit(0)).cast("int").alias("dyno_ecode"),
-        F.when(is_mem | is_load, fstr("source")).otherwise(F.lit("")).alias("source"),
-        F.when(is_mem, ffloat("memory_cache")).otherwise(F.lit(0.0)).alias("memory_cache"),
-        F.when(is_mem, fint_swallow("memory_pgpgin")).otherwise(F.lit(0)).cast("int").alias("memory_pgpgin"),
-        F.when(is_mem, fint_swallow("memory_pgpgout")).otherwise(F.lit(0)).cast("int").alias("memory_pgpgout"),
-        F.when(is_mem, ffloat("memory_rss")).otherwise(F.lit(0.0)).alias("memory_rss"),
-        F.when(is_mem, ffloat("memory_swap")).otherwise(F.lit(0.0)).alias("memory_swap"),
-        F.when(is_mem, ffloat("memory_total")).otherwise(F.lit(0.0)).alias("memory_total"),
-        F.when(is_load, ffloat("load_avg_1m")).otherwise(F.lit(0.0)).alias("load_avg_1m"),
-        F.when(is_load, ffloat("load_avg_5m")).otherwise(F.lit(0.0)).alias("load_avg_5m"),
-        F.when(is_load, ffloat("load_avg_15m")).otherwise(F.lit(0.0)).alias("load_avg_15m"),
-        (
-            (logfmt_cls & odd_quotes)
-            | (is_router & router_bad)
-            | (is_derr & ~ecode_ok)
-        ).alias("parse_error"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# native_fast: locate/substring field scanning — NO java.util.regex over the
-# full line. The java regex engine re-scans ~300 chars per pattern per row
-# (the native parser runs ~10 of them); indexOf + a tiny ^[+-]?\d+$ rlike on
-# the ≤10-char EXTRACTED value does the same work in a fraction of the time.
-# Same semantics as the shared patterns on the engine's declared grammar
-# (space-separated pairs; suffix keys in canonical 'sample#<metric>' form);
-# pinned by tests/test_parse_golden.py + the hypothesis fuzz.
-# ---------------------------------------------------------------------------
-
-_BIG = 1_000_000  # substring 'to end of string' length
-
-
-def _ff_val(pad: Column, key: str) -> tuple[Column, Column]:
-    """(kpos, raw space-terminated value after ' key='). kpos=0 → absent."""
-    needle = " " + key + "="
-    kpos = F.locate(needle, pad)
-    after = pad.substr(kpos + len(needle), F.lit(_BIG))
-    return kpos, F.substring_index(after, " ", 1)
-
-
-def _ff_strip(val: Column, unit: str) -> Column:
-    """TrimSuffix(unit) — strips ONE trailing unit if present."""
-    if not unit:
-        return val
-    return F.when(
-        val.endswith(unit), val.substr(F.lit(1), F.length(val) - len(unit))
-    ).otherwise(val)
-
-
-def _ff_int(pad: Column, key: str, unit: str = "") -> tuple[Column, Column]:
-    """(value-or-0, present-but-bad) with router semantics: presence = 'key='
-    or a bare valueless 'key' token; bad unless the value is a pure int
-    (after TrimSuffix(unit))."""
-    kpos, raw = _ff_val(pad, key)
-    stripped = _ff_strip(raw, unit)
-    ok = (kpos > 0) & stripped.rlike(r"^[+-]?\d+$")
-    v = F.when(ok, stripped.cast("int")).otherwise(F.lit(0))
-    # bad = present & ~ok, with present = (kpos>0) | bare. When the key= form
-    # exists, bare is irrelevant — so the bare probe (a full-line locate over
-    # a freshly concat'd copy) hides in the kpos==0 CaseWhen branch and runs
-    # only on rows actually missing 'key=' (~never on a canonical corpus).
-    # The probe alone was ~35% of the whole fast-struct cost when evaluated
-    # unconditionally (4 keys x full-line scan per router row).
-    bare = F.locate(" " + key + " ", F.concat(pad, F.lit(" "))) > 0
-    bad = F.when(kpos > 0, ~ok).otherwise(bare)
-    return v, bad
-
-
-def _ff_str(pad: Column, key: str) -> Column:
-    """Quoted-or-bare string value (pat_str semantics): '"([^"]*)"' needs a
-    CLOSING quote (unterminated → falls through to the bare alternative,
-    which stops at the quote → empty); bare stops at space or quote."""
-    needle = " " + key + "="
-    kpos = F.locate(needle, pad)
-    after = pad.substr(kpos + len(needle), F.lit(_BIG))
-    inner = after.substr(F.lit(2), F.lit(_BIG))
-    quoted = F.when(F.locate('"', inner) > 0, F.substring_index(inner, '"', 1)).otherwise(
-        F.lit("")
-    )
-    bare = F.substring_index(F.substring_index(after, " ", 1), '"', 1)
-    return F.when(kpos == 0, F.lit("")).otherwise(
-        F.when(after.startswith('"'), quoted).otherwise(bare)
-    )
-
-
-def _ff_float(pad: Column, key: str, unit: str = "") -> Column:
-    """Float-or-0.0 for canonical 'sample#<metric>' keys (errors swallowed,
-    dyno_msg.go semantics)."""
-    kpos, raw = _ff_val(pad, "sample#" + key)
-    stripped = _ff_strip(raw, unit)
-    ok = (kpos > 0) & stripped.rlike(r"^[+-]?(\d+\.?\d*|\.\d+)$")
-    return F.when(ok, stripped.cast("double")).otherwise(F.lit(0.0))
-
-
-def _ff_int_swallow(pad: Column, key: str, unit: str) -> Column:
-    kpos, raw = _ff_val(pad, "sample#" + key)
-    stripped = _ff_strip(raw, unit)
-    ok = (kpos > 0) & stripped.rlike(r"^[+-]?\d+$")
-    return F.when(ok, stripped.cast("int")).otherwise(F.lit(0))
-
-
-_FF_ROUTER_KEYS = (("connect", "ms"), ("service", "ms"), ("status", ""), ("bytes", ""))
-_FF_MEM_FLOATS = ("memory_cache", "memory_rss", "memory_swap", "memory_total")
-_FF_MEM_INTS = ("memory_pgpgin", "memory_pgpgout")
-_FF_LOAD_KEYS = ("load_avg_1m", "load_avg_5m", "load_avg_15m")
-
-
-def with_parsed_native_fast(df: DataFrame) -> DataFrame:
-    """native_fast = locate/substring scan + quote-parity regex fallback for
-    adversarial rows (schemas.ADVERSARIAL_RX — one rlike per row, the only
-    full-line java regex the fast path runs).
-
-    Whole-stage-codegen subexpression elimination SKIPS CaseWhen branches
-    (EquivalentExpressions only recurses always-evaluated children), so a
-    struct written as nested when()s re-evaluates every shared intermediate
-    — the padded line, per-key locate positions, extracted raw tokens — once
-    per reference: measured ~7-8 evaluations of each key's locate/substring
-    chain per router row, which put the whole-struct eval at 5.4 s for 2M
-    rows where the bare extraction chains cost 0.45 s (round-3 verdict
-    wrong #1 was the same disease at the struct level; round 5 found the
-    per-key chains re-evaluating INSIDE the fast struct too).
-
-    Shape that fixes it: per-key intermediates (kpos + raw token, and the
-    post-'key=' tail for the two string keys) are materialized as their own
-    projection columns, class-gated so a key is only scanned for on rows of
-    the class that carries it. The struct assembly then re-references cheap
-    ATTRIBUTES, not chains; what remains branch-local is O(token) work on
-    ≤10-char extracts. CollapseProject keeps the projections separate on its
-    own because every intermediate is referenced several times and is
-    non-cheap. All projections still fuse into one codegen stage — this
-    changes generated-code structure, not the plan's operator count."""
-
-    def build():
-        text, mc = F.col("text"), F.col("msg_class")
-        pad = F.col("_pad")
-        is_router = mc == S.CLS_ROUTER
-        is_mem = mc == S.CLS_DYNO_MEM
-        is_load = mc == S.CLS_DYNO_LOAD
-        is_rerr = mc == S.CLS_ROUTER_ERROR
-
-        inter: dict[str, Column] = {}
-
-        def kchain(key: str, prefix: str = "") -> tuple[Column, Column]:
-            needle = " " + prefix + key + "="
-            kpos = F.locate(needle, pad)
-            raw = F.substring_index(pad.substr(kpos + len(needle), F.lit(_BIG)), " ", 1)
-            return kpos, raw
-
-        for key, _unit in _FF_ROUTER_KEYS:
-            kp, raw = kchain(key)
-            inter["_kp_" + key] = F.when(is_router, kp)
-            inter["_rv_" + key] = F.when(is_router, raw)
-        for key in _FF_MEM_FLOATS + _FF_MEM_INTS:
-            kp, raw = kchain(key, prefix="sample#")
-            inter["_kp_" + key] = F.when(is_mem, kp)
-            inter["_rv_" + key] = F.when(is_mem, raw)
-        for key in _FF_LOAD_KEYS:
-            kp, raw = kchain(key, prefix="sample#")
-            inter["_kp_" + key] = F.when(is_load, kp)
-            inter["_rv_" + key] = F.when(is_load, raw)
-        # the two quoted-or-bare string keys keep the raw tail after 'key='
-        # (the quote logic needs more than the space-terminated token)
-        for key, gate in (("code", is_rerr), ("source", is_mem | is_load)):
-            needle = " " + key + "="
-            kpos = F.locate(needle, pad)
-            inter["_kp_" + key] = F.when(gate, kpos)
-            inter["_after_" + key] = F.when(gate, pad.substr(kpos + len(needle), F.lit(_BIG)))
-
-        qa = _native_struct(mc, text, qa=True)
-        p = F.when(_adv(text), qa).otherwise(_fast_struct_from_cols(mc, text))
-        return inter, p
-
-    inter, p = _cached_exprs("native_fast", build)
-    return (
-        df.withColumn("_pad", F.concat(F.lit(" "), F.col("text")))
-        .withColumns(dict(inter))
-        .withColumn("p", p)
-        .drop("_pad", *inter.keys())
-    )
-
-
-def _ff_str_from_cols(kp: Column, after: Column) -> Column:
-    """_ff_str over pre-extracted (kpos, tail-after-'key=') attribute columns."""
-    inner = after.substr(F.lit(2), F.lit(_BIG))
-    quoted = F.when(F.locate('"', inner) > 0, F.substring_index(inner, '"', 1)).otherwise(
-        F.lit("")
-    )
-    bare = F.substring_index(F.substring_index(after, " ", 1), '"', 1)
-    return F.when(kp.isNull() | (kp == 0), F.lit("")).otherwise(
-        F.when(after.startswith('"'), quoted).otherwise(bare)
-    )
-
-
-def _fast_struct_from_cols(msg_class: Column, text: Column) -> Column:
-    """The fast-path struct assembled from the `inter` attribute columns laid
-    down by with_parsed_native_fast — identical semantics to
-    _native_fast_struct (pinned by the goldens + hypothesis fuzz), but every
-    re-referenced subexpression is an attribute, so CaseWhen's skipped
-    subexpression elimination no longer multiplies full-line scans."""
-    pad = F.col("_pad")
-    odd_quotes = _odd_quotes_expr(text)
-    is_router = msg_class == S.CLS_ROUTER
-
-    router_bad = F.lit(False)
-    ints = {}
-    for key, unit in _FF_ROUTER_KEYS:
-        kp, raw = F.col("_kp_" + key), F.col("_rv_" + key)
-        stripped = _ff_strip(raw, unit)
-        ok = (kp > 0) & stripped.rlike(r"^[+-]?\d+$")
-        ints[key] = F.when(ok, stripped.cast("int")).otherwise(F.lit(0))
-        # the bare-token probe (full-line locate over a fresh concat) hides in
-        # the kpos==0 branch: it only runs on rows actually missing 'key='
-        bare = F.locate(" " + key + " ", F.concat(pad, F.lit(" "))) > 0
-        router_bad = router_bad | F.when(kp > 0, ~ok).otherwise(bare)
-
-    code2 = F.substring(text, len(S.SENTINEL_DYNO_ERROR) + 1, 2)
-    ecode_ok = code2.rlike(r"^(\d\d|[+-]\d)$")
-
-    is_mem = msg_class == S.CLS_DYNO_MEM
-    is_load = msg_class == S.CLS_DYNO_LOAD
-    is_rerr = msg_class == S.CLS_ROUTER_ERROR
-    is_derr = msg_class == S.CLS_DYNO_ERROR
-    logfmt_cls = is_router | is_rerr | is_mem | is_load
-
-    def ffloat(key: str, unit: str = "") -> Column:
-        kp, raw = F.col("_kp_" + key), F.col("_rv_" + key)
-        stripped = _ff_strip(raw, unit)
-        ok = (kp > 0) & stripped.rlike(r"^[+-]?(\d+\.?\d*|\.\d+)$")
-        return F.when(ok, stripped.cast("double")).otherwise(F.lit(0.0))
-
-    def fint_swallow(key: str, unit: str) -> Column:
-        kp, raw = F.col("_kp_" + key), F.col("_rv_" + key)
-        stripped = _ff_strip(raw, unit)
-        ok = (kp > 0) & stripped.rlike(r"^[+-]?\d+$")
-        return F.when(ok, stripped.cast("int")).otherwise(F.lit(0))
-
-    code_str = _ff_str_from_cols(F.col("_kp_code"), F.col("_after_code"))
-    source_str = _ff_str_from_cols(F.col("_kp_source"), F.col("_after_source"))
-
-    return F.struct(
-        F.when(is_router, ints["status"]).otherwise(F.lit(0)).cast("int").alias("status"),
-        F.when(is_router, ints["service"]).otherwise(F.lit(0)).cast("int").alias("service"),
-        F.when(is_rerr, code_str).otherwise(F.lit("")).alias("error_code"),
-        F.when(is_derr & ecode_ok, code2.cast("int")).otherwise(F.lit(0)).cast("int").alias("dyno_ecode"),
-        F.when(is_mem | is_load, source_str).otherwise(F.lit("")).alias("source"),
-        F.when(is_mem, ffloat("memory_cache", "MB")).otherwise(F.lit(0.0)).alias("memory_cache"),
-        F.when(is_mem, fint_swallow("memory_pgpgin", "pages")).otherwise(F.lit(0)).cast("int").alias("memory_pgpgin"),
-        F.when(is_mem, fint_swallow("memory_pgpgout", "pages")).otherwise(F.lit(0)).cast("int").alias("memory_pgpgout"),
-        F.when(is_mem, ffloat("memory_rss", "MB")).otherwise(F.lit(0.0)).alias("memory_rss"),
-        F.when(is_mem, ffloat("memory_swap", "MB")).otherwise(F.lit(0.0)).alias("memory_swap"),
-        F.when(is_mem, ffloat("memory_total", "MB")).otherwise(F.lit(0.0)).alias("memory_total"),
-        F.when(is_load, ffloat("load_avg_1m")).otherwise(F.lit(0.0)).alias("load_avg_1m"),
-        F.when(is_load, ffloat("load_avg_5m")).otherwise(F.lit(0.0)).alias("load_avg_5m"),
-        F.when(is_load, ffloat("load_avg_15m")).otherwise(F.lit(0.0)).alias("load_avg_15m"),
-        (
-            (logfmt_cls & odd_quotes)
-            | (is_router & router_bad)
-            | (is_derr & ~ecode_ok)
-        ).alias("parse_error"),
-    )
-
-
-def parse_fields_native_fast(msg_class: Column, text: Column) -> Column:
-    """Column-level variant (tests / ad-hoc use): same semantics as
-    with_parsed_native_fast but as one expression — pays the conditional
-    re-evaluation cost described there; the pipeline path uses the
-    DataFrame-level form."""
-    fast = _native_fast_struct(msg_class, text)
-    return F.when(_adv(text), _native_struct(msg_class, text, qa=True)).otherwise(fast)
-
-
-def _native_fast_struct(msg_class: Column, text: Column) -> Column:
-    pad = F.concat(F.lit(" "), text)
-    odd_quotes = _odd_quotes_expr(text)
-    is_router = msg_class == S.CLS_ROUTER
-
-    router_bad = F.lit(False)
-    ints = {}
-    for key, unit in (("connect", "ms"), ("service", "ms"), ("status", ""), ("bytes", "")):
-        v, bad = _ff_int(pad, key, unit)
-        ints[key] = v
-        router_bad = router_bad | bad
-
-    code2 = F.substring(text, len(S.SENTINEL_DYNO_ERROR) + 1, 2)
-    ecode_ok = code2.rlike(r"^(\d\d|[+-]\d)$")
-
-    is_mem = msg_class == S.CLS_DYNO_MEM
-    is_load = msg_class == S.CLS_DYNO_LOAD
-    is_rerr = msg_class == S.CLS_ROUTER_ERROR
-    is_derr = msg_class == S.CLS_DYNO_ERROR
-    logfmt_cls = is_router | is_rerr | is_mem | is_load
-
-    return F.struct(
-        F.when(is_router, ints["status"]).otherwise(F.lit(0)).cast("int").alias("status"),
-        F.when(is_router, ints["service"]).otherwise(F.lit(0)).cast("int").alias("service"),
-        F.when(is_rerr, _ff_str(pad, "code")).otherwise(F.lit("")).alias("error_code"),
-        F.when(is_derr & ecode_ok, code2.cast("int")).otherwise(F.lit(0)).cast("int").alias("dyno_ecode"),
-        F.when(is_mem | is_load, _ff_str(pad, "source")).otherwise(F.lit("")).alias("source"),
-        F.when(is_mem, _ff_float(pad, "memory_cache", "MB")).otherwise(F.lit(0.0)).alias("memory_cache"),
-        F.when(is_mem, _ff_int_swallow(pad, "memory_pgpgin", "pages")).otherwise(F.lit(0)).cast("int").alias("memory_pgpgin"),
-        F.when(is_mem, _ff_int_swallow(pad, "memory_pgpgout", "pages")).otherwise(F.lit(0)).cast("int").alias("memory_pgpgout"),
-        F.when(is_mem, _ff_float(pad, "memory_rss", "MB")).otherwise(F.lit(0.0)).alias("memory_rss"),
-        F.when(is_mem, _ff_float(pad, "memory_swap", "MB")).otherwise(F.lit(0.0)).alias("memory_swap"),
-        F.when(is_mem, _ff_float(pad, "memory_total", "MB")).otherwise(F.lit(0.0)).alias("memory_total"),
-        F.when(is_load, _ff_float(pad, "load_avg_1m")).otherwise(F.lit(0.0)).alias("load_avg_1m"),
-        F.when(is_load, _ff_float(pad, "load_avg_5m")).otherwise(F.lit(0.0)).alias("load_avg_5m"),
-        F.when(is_load, _ff_float(pad, "load_avg_15m")).otherwise(F.lit(0.0)).alias("load_avg_15m"),
-        (
-            (logfmt_cls & odd_quotes)
-            | (is_router & router_bad)
-            | (is_derr & ~ecode_ok)
-        ).alias("parse_error"),
-    )
-
-
 # The UDF IS deterministic; the marker is an optimizer fence. Without it,
 # Catalyst clones the UDF call when a downstream filter references one struct
 # field and a projection references others (filter-below-project each get
@@ -983,12 +429,12 @@ def _native_fast_struct(msg_class: Column, text: Column) -> Column:
 # every plan carries exactly ONE Arrow exchange (asserted by tests/test_plans).
 _parse_fields_once = parse_fields_udf.asNondeterministic()
 
-# The native parsers' Column trees are ~10^3 expression nodes built through
-# one py4j round-trip each — rebuilding them cost ~1-2 s of DRIVER time per
-# pipeline run (measured: noop total minus executor phases). They are pure
-# functions of column NAMES, so one instance per SparkContext is reused by
-# every with_parsed call; keyed by context id so a restarted JVM/context
-# never sees a stale java handle.
+# The parse Column (the nine-way class-code when-chain, the text gate and
+# the UDF call) is built node by node over py4j. It is a pure function of
+# column NAMES, so one instance per SparkContext is reused by every
+# with_parsed call (once per pipeline chunk, once per streaming micro-batch);
+# keyed by context id so a restarted JVM/context never sees a stale java
+# handle.
 _EXPR_CACHE: dict = {}
 
 
@@ -1002,27 +448,21 @@ def _cached_exprs(key: str, build):
     return _EXPR_CACHE[ck]
 
 
-def with_parsed(df: DataFrame, parser: str = "pandas") -> DataFrame:
-    """classified df → + ``p`` struct column (one parse pass, both variants)."""
-    if parser == "pandas":
-        def build_pandas():
-            # encode the class as its tinyint code and null the text for
-            # classes the parser never reads (~14% of rows): the class strings
-            # and the unread text would otherwise cross the Arrow JVM→Python
-            # boundary as real bytes; nulls are a validity bit
-            cid = F.lit(None).cast("tinyint")
-            for c, i in S.CLS_ID.items():
-                cid = F.when(F.col("msg_class") == c, i).otherwise(cid)
-            gated = F.when(F.col("msg_class").isin(S.PARSED_CLASSES), F.col("text"))
-            return (_parse_fields_once(cid, gated),)
+def with_parsed(df: DataFrame) -> DataFrame:
+    """classified df → + ``p`` struct column (one parse pass)."""
 
-        (p,) = _cached_exprs("pandas", build_pandas)
-    elif parser == "native":
-        return with_parsed_native(df)
-    elif parser == "native_fast":
-        return with_parsed_native_fast(df)
-    else:
-        raise ValueError("parser must be 'pandas', 'native', or 'native_fast'")
+    def build():
+        # encode the class as its tinyint code and null the text for
+        # classes the parser never reads (~14% of rows): the class strings
+        # and the unread text would otherwise cross the Arrow JVM→Python
+        # boundary as real bytes; nulls are a validity bit
+        cid = F.lit(None).cast("tinyint")
+        for c, i in S.CLS_ID.items():
+            cid = F.when(F.col("msg_class") == c, i).otherwise(cid)
+        gated = F.when(F.col("msg_class").isin(S.PARSED_CLASSES), F.col("text"))
+        return (_parse_fields_once(cid, gated),)
+
+    (p,) = _cached_exprs("arrow", build)
     return df.withColumn("p", p)
 
 

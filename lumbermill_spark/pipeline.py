@@ -9,8 +9,7 @@ Shape of the plan (and why it scales):
   * ONE parse pass produces a wide ``p`` struct; the DataFrame is persisted
     once and the five sinks + metrics are filters/projections over it — the
     cache is the Spark analog of the reference's single fused loop. At real
-    cluster scale persist(DISK_ONLY/MEMORY_AND_DISK) bounds memory; the
-    alternative (5 re-scans with pushed-down class filters) is a config flag;
+    cluster scale persist(DISK_ONLY/MEMORY_AND_DISK) bounds memory;
   * fan-out writes go through the sinks.Sink seam: parquet appends
     partitioned by (chunk_id, md5 ``bucket``) — the consistent-hash ring
     analog (route.py) — or Iceberg's ``bucket(B, token)`` hidden
@@ -25,6 +24,7 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,7 +42,6 @@ from . import sinks as sink_mod
 
 @dataclass
 class PipelineConfig:
-    parser: str = "pandas"  # 'pandas' (north_star default) | 'native'
     sink_format: str = "parquet"  # 'parquet' | 'noop' | 'iceberg' (sinks.py)
     n_buckets: int = 16
     n_salts: int = 8
@@ -54,31 +53,6 @@ class PipelineConfig:
     # (the per-chunk file-id dictionary) and a driver-sized file list —
     # the cap bounds both (round-3 verdict, wrong #3 / next #6)
     chunk_files: int | None = None
-    # explicit salted routing shuffle before the fan-out. True is the real
-    # pipeline (sink placement needs it); False lets the aggregation's own
-    # hash exchange be the only routing — used to isolate the shuffle's cost
-    # in scaling measurements
-    route_shuffle: bool = True
-    # 'cache': ONE parse pass persisted, sinks are filters over it (round-1
-    # design). 'rescan': no cache — each sink filters its class NATIVELY
-    # (pushed to the scan) and parses only those rows; total parse work is
-    # ~1.85x one pass (summary + per-class) but there is no 2M-row cache to
-    # build, serialize, and re-read. Which wins depends on text width vs
-    # class selectivity — both are measured in bench.py.
-    fanout_mode: str = "cache"  # 'cache' | 'rescan'
-    # shuffle each sink frame onto its bucket key right before the write:
-    # one file per (chunk, bucket) instead of one per (task, bucket) —
-    # measured 10,247 → ~100 files and 54 s → ~35 s at sf0.1/local[32].
-    # At 10^12 rows this is what keeps the table listable; the extra
-    # exchange is tiny vs the parse (sink rows are already filtered).
-    sink_repartition: bool = True
-    # submit the five independent sink-write jobs from concurrent threads:
-    # each is a small filtered projection over the shared cached parse pass,
-    # and serial submission leaves most executor slots idle between jobs
-    # (measured: the sink_writes phase is ~40% of the sf0.1 parquet run).
-    # Standard Spark multi-threaded action submission — also what overlaps
-    # straggler tails across output jobs on a real cluster.
-    concurrent_sink_writes: bool = True
     # which catalog-table (fs_managed=False) orphan chunks resume may DELETE:
     #   'owned' (default) — only chunk ids whose run_id this out_dir's ledger
     #     owns (begin/done markers), so a concurrent deployment sharing the
@@ -130,7 +104,7 @@ def build_parsed(df: DataFrame, cfg: PipelineConfig, spark: SparkSession, dims=N
     if cfg.enrich:
         dims = dims or enrich_mod.load_dims(spark)
         classified = enrich_mod.enrich(classified, dims)
-    return P.with_parsed(classified, parser=cfg.parser)
+    return P.with_parsed(classified)
 
 
 def run(
@@ -218,22 +192,16 @@ def run(
     rows_in = 0
     n_chunks = 0
     phases: dict[str, float] = {}
-    # ONE thread pool for the whole run (sink + metric job submission): a
-    # per-chunk pool would churn Python threads — and, under py4j's pinned
-    # thread mode, matching JVM threads — once per chunk at 10^3-chunk scale
-    pool = None
-    if cfg.concurrent_sink_writes:
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=len(P.SINK_BUILDERS), thread_name_prefix="lm-write")
-
-    def _run_jobs(jobs) -> None:
-        if pool is None:
-            for j in jobs:
-                j()
-        else:
-            for f in [pool.submit(j) for j in jobs]:
-                f.result()  # re-raise the first failure
+    # The five sink writes (and the metric jobs chained onto them) are
+    # independent small projections over the shared cached parse pass:
+    # submitting them from concurrent threads keeps executor slots busy that
+    # serial submission would leave idle between jobs (measured: the sink
+    # writes are ~40% of the sf0.1 parquet run), and on a real cluster it
+    # overlaps straggler tails across output jobs. ONE pool for the whole
+    # run: a per-chunk pool would churn Python threads — and, under py4j's
+    # pinned thread mode, matching JVM threads — once per chunk at
+    # 10^3-chunk scale
+    pool = ThreadPoolExecutor(max_workers=len(P.SINK_BUILDERS), thread_name_prefix="lm-write")
 
     def _phase(name: str, t_start: float) -> float:
         now = time.time()
@@ -266,7 +234,7 @@ def run(
             classified = C.classify(df)
             if cfg.enrich:
                 classified = enrich_mod.enrich(classified, dims)
-            parsed = P.with_parsed(classified, parser=cfg.parser)
+            parsed = P.with_parsed(classified)
             parsed = parsed.withColumn("bucket", route.bucket_expr(F.col("token"), cfg.n_buckets))
             # prune to exactly what the sinks/metrics/lineage consume before the
             # persist — at 10^12 rows the cache/shuffle footprint is the limiting
@@ -287,25 +255,24 @@ def run(
             parsed = parsed.withColumn("salt", route.salt_expr(F.col("turn_idx"), cfg.n_salts))
             keep = ["token", "time", "tool", "text", "msg_class", "p", "bucket", "file_id", "salt"]
             parsed = parsed.select(*[c for c in keep if c in parsed.columns])
-            if cfg.route_shuffle:
-                # encode msg_class (avg ~11-char string) as a tinyint below the
-                # exchange and decode with a when-chain above it — Catalyst's
-                # column pruning keeps the decode on the reduce side, so the
-                # shuffle carries 1 byte instead of offset+string per row
-                enc = F.lit(None).cast("tinyint")
-                dec = F.lit(None).cast("string")
-                for i, c in enumerate(S.ALL_CLASSES):
-                    enc = F.when(F.col("msg_class") == c, i).otherwise(enc)
-                    dec = F.when(F.col("cls_id") == i, c).otherwise(dec)
-                parsed = parsed.withColumn("cls_id", enc).drop("msg_class")
-                parsed = route.salted_repartition(parsed, nshuffle, salt=F.col("salt"))
-                parsed = parsed.withColumn("msg_class", dec).drop("cls_id")
+            # salted routing shuffle (sink placement). Encode msg_class (avg
+            # ~11-char string) as a tinyint below the exchange and decode with
+            # a when-chain above it — Catalyst's column pruning keeps the
+            # decode on the reduce side, so the shuffle carries 1 byte instead
+            # of offset+string per row
+            enc = F.lit(None).cast("tinyint")
+            dec = F.lit(None).cast("string")
+            for i, c in enumerate(S.ALL_CLASSES):
+                enc = F.when(F.col("msg_class") == c, i).otherwise(enc)
+                dec = F.when(F.col("cls_id") == i, c).otherwise(dec)
+            parsed = parsed.withColumn("cls_id", enc).drop("msg_class")
+            parsed = route.salted_repartition(parsed, nshuffle, salt=F.col("salt"))
+            parsed = parsed.withColumn("msg_class", dec).drop("cls_id")
             parsed = parsed.drop("salt")
             # the cache exists for the fan-out (6 downstream consumers in parquet
             # mode); in noop mode the single fused aggregation is the only
-            # consumer, and in rescan mode each sink re-parses its own class —
-            # either way building the columnar cache would be pure overhead
-            materialize = cfg.sink_format != "noop" and cfg.fanout_mode == "cache"
+            # consumer, so building the columnar cache would be pure overhead
+            materialize = cfg.sink_format != "noop"
             if materialize:
                 parsed = parsed.persist(cfg.storage_level)
             try:
@@ -350,31 +317,27 @@ def run(
                         totals[sink] += n
 
                 tp = _phase("summary", tp)
-                # fan-out: 5 filtered projections over the cached parse pass
-                # (cache mode), or 5 class-filtered re-parses where the native
-                # msg_class predicate is pushed below the parse UDF (rescan
-                # mode). Each metric job is CHAINED onto the one sink write it
+                # fan-out: 5 filtered projections over the cached parse pass.
+                # Each metric job is CHAINED onto the one sink write it
                 # actually depends on (error codes ← events_router, rollup ←
                 # router, class_counts ← nothing), so metrics overlap the
                 # other sinks' writes inside the same concurrent phase instead
                 # of waiting for a full barrier — one barrier total, and the
                 # lineage commit still lands strictly after every write.
-                cls_of_sink = {v: k for k, v in sink_of.items()}
                 write_metrics = cfg.write_metrics and cfg.sink_format != "noop"
 
                 def _write_sink(sink_name: str, builder) -> None:
-                    if cfg.fanout_mode == "rescan" and not materialize:
-                        src = P.with_parsed(
-                            classified.filter(F.col("msg_class") == cls_of_sink[sink_name]),
-                            parser=cfg.parser,
-                        )
-                    else:
-                        src = parsed
-                    sdf = builder(src).withColumn(
-                        "bucket", route.bucket_expr(F.col("token"), cfg.n_buckets)
+                    # shuffle each sink frame onto its bucket key right before
+                    # the write: one file per (chunk, bucket) instead of one per
+                    # (task, bucket) — measured 10,247 → ~100 files and 54 s →
+                    # ~35 s at sf0.1/local[32]. At 10^12 rows this is what keeps
+                    # the table listable; the extra exchange is tiny vs the
+                    # parse (sink rows are already filtered).
+                    sdf = (
+                        builder(parsed)
+                        .withColumn("bucket", route.bucket_expr(F.col("token"), cfg.n_buckets))
+                        .repartition(cfg.n_buckets, "bucket")
                     )
-                    if cfg.sink_repartition:
-                        sdf = sdf.repartition(cfg.n_buckets, "bucket")
                     sink_writer.write(sdf, _sink_dir(out_dir, sink_name), chunk_id, "bucket")
 
                 # Metrics derive from what is ALREADY materialized — the way
@@ -441,7 +404,8 @@ def run(
                 ]
                 if write_metrics:
                     jobs.append(_m_class_counts)
-                _run_jobs(jobs)
+                for f in [pool.submit(j) for j in jobs]:
+                    f.result()  # re-raise the first failure
 
                 tp = _phase("fanout_writes", tp)
                 for k, v in chunk_counts.items():
@@ -461,8 +425,7 @@ def run(
                     parsed.unpersist()
 
     finally:
-        if pool is not None:
-            pool.shutdown(wait=True)
+        pool.shutdown(wait=True)
 
     return PipelineResult(
         rows_in=rows_in,

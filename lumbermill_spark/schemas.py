@@ -84,8 +84,8 @@ TOKEN_PREFIX = "t."  # drain.go:20
 HEROKU_NAME = "heroku"  # drain.go:22
 
 # ---------------------------------------------------------------------------
-# Extraction regexes — the single source of truth shared by the pandas-UDF
-# parser, the native-expression parser, AND the generated DuckDB oracle SQL.
+# Extraction regexes — the single source of truth shared by the Arrow-UDF
+# parser AND the generated DuckDB oracle SQL.
 # RE2-compatible subset (no lookarounds) so Python `re`, Java regex and DuckDB
 # all agree. Semantics mirror the Go handlers:
 #   * string key:  key=value | key="value"            (router_msg.go:44-57)
@@ -177,15 +177,15 @@ LOAD_KEYS = {
 # Escape contract (tests/test_parse_fuzz.py): in-grammar escapes inside
 # quoted values are the FULL single-char table of Go's unquote
 # (unquote.go:86-119): the identity set \" \\ \/ \' plus the control set
-# \b \f \n \r \t. All three parsers and both oracles decode them — the
+# \b \f \n \r \t. The parser and both oracles decode them — the
 # Python sides (Arrow parser, oracle.py scanner) byte-exactly, the
-# regex-only sides (native parsers' QA branch, DuckDB SQL oracle) via the
-# sentinel-chained literal replaces in ESCAPE_CHAIN below, which is provably
-# equal to the left-to-right scan on every input not containing the sentinel
-# byte U+0001 (never emitted by the grammar). Remaining contract boundary:
+# regex-only side (DuckDB SQL oracle) via the sentinel-chained literal
+# replaces in ESCAPE_CHAIN below, which is provably equal to the
+# left-to-right scan on every input not containing the sentinel byte U+0001
+# (never emitted by the grammar). Remaining contract boundary:
 #   * \uXXXX (unquote.go:120-141, incl. surrogate pairs): decoded exactly by
-#     the Arrow parser and the Python scanner oracle; the pure-regex sides
-#     have no numeric-decode callback, so \u stays LITERAL there (\uXXXX →
+#     the Arrow parser and the Python scanner oracle; the pure-regex side
+#     has no numeric-decode callback, so \u stays LITERAL there (\uXXXX →
 #     uXXXX) — datagen never emits \u, keeping the driver gate exact; the
 #     \u contract is pinned by pytest goldens on the default parser instead.
 #   * invalid escapes (Go fails unquote → row dropped): we decode literally
@@ -208,7 +208,7 @@ LOAD_KEYS = {
 # desc="Blank app" — ~8% of all rows!) cannot anchor anything and stays on
 # the fast path; flagging on bare \s sent all those rows through the
 # quote-parity crawl and was the real cost of round-3's quote-awareness
-# (+52% on native_fast). Branch 1 stops at the FIRST terminator (content
+# (+52% on a Catalyst parser since removed). Branch 1 stops at the FIRST terminator (content
 # and terminator classes disjoint — no java.util.regex backtracking);
 # branch 2's keyword scan only runs inside spans that survived branch 1.
 # \s (not just space/tab) everywhere so a quoted \r or \f cannot leak the
@@ -240,15 +240,14 @@ ESCAPE_TABLE = (
     ("r", "\r"),
     ("t", "\t"),
 )
-# Sentinel-chained decode for the regex-only engines (java expressions /
-# DuckDB SQL), equal to the scanner's left-to-right two-byte walk:
+# Sentinel-chained decode for the regex-only engine (DuckDB SQL), equal to the scanner's left-to-right two-byte walk:
 #   1. `\\` → U+0001   (non-overlapping global replace consumes backslash
 #                       PAIRS left-to-right exactly like the scanner)
 #   2. each remaining known pair `\c` → its mapped char (the leftover
 #      backslashes are isolated escape-starts, so the singles are disjoint)
 #   3. remaining `\(.)` → `$1`  (invalid-escape literal decode, incl. \u)
 #   4. U+0001 → `\`
-# Step order is load-bearing; both regex sides must apply the same chain.
+# Step order is load-bearing.
 ESCAPE_SENTINEL = "\x01"
 ESCAPE_CHAIN = [("\\\\", ESCAPE_SENTINEL)] + [
     ("\\" + c, ch) for c, ch in ESCAPE_TABLE if c != "\\"
@@ -279,7 +278,7 @@ LOAD_KEYS_QA = {k: quote_aware(p) for k, p in LOAD_KEYS.items()}
 # One RE2 pass that extracts every value field of a class at once, applicable
 # when the line ends with the producer's canonical key run (router.go /
 # lpxgen/heroku.go emit fixed layouts; any real logfmt producer has a fixed
-# key order per call site). Dispatch in the pandas parser:
+# key order per call site). Dispatch in the Arrow parser:
 #
 #   adversarial slice → per-key QA patterns (unchanged);
 #   safe slice        → ONE mega extract; rows where it matches take its

@@ -46,7 +46,7 @@ def _start(writer, out_dir: str, ckpt_name: str, checkpoint_dir: str | None,
     return writer.start()
 
 
-def _write_sinks_batch(batch_df: DataFrame, batch_id: int, out_dir: str, parser: str) -> None:
+def _write_sinks_batch(batch_df: DataFrame, batch_id: int, out_dir: str) -> None:
     """One micro-batch: classify → parse → fan-out.
 
     Idempotent under micro-batch retry: every write is partitioned by
@@ -54,7 +54,7 @@ def _write_sinks_batch(batch_df: DataFrame, batch_id: int, out_dir: str, parser:
     foreachBatch with the same batch_id after a failure, the retry replaces
     the partial partition instead of appending duplicates. Combined with the
     checkpointed file source this gives end-to-end exactly-once."""
-    parsed = P.with_parsed(C.classify(batch_df), parser=parser).persist()
+    parsed = P.with_parsed(C.classify(batch_df)).persist()
 
     def write(df: DataFrame, path: str) -> None:
         (
@@ -81,7 +81,6 @@ def start_pipeline_stream(
     input_dir: str,
     out_dir: str,
     checkpoint_dir: str | None = None,
-    parser: str = "pandas",
     available_now: bool = False,
     trigger_seconds: int = 1,
 ):
@@ -92,7 +91,7 @@ def start_pipeline_stream(
     """
     stream = read_transcript_stream(spark, input_dir)
     writer = stream.writeStream.foreachBatch(
-        lambda df, bid: _write_sinks_batch(df, bid, out_dir, parser)
+        lambda df, bid: _write_sinks_batch(df, bid, out_dir)
     )
     return _start(writer, out_dir, "_checkpoint", checkpoint_dir, available_now, trigger_seconds)
 
@@ -150,7 +149,6 @@ def conv_running_stats_stream(
 def sink_freshness_stream(
     spark: SparkSession,
     input_dir: str,
-    parser: str = "pandas",
     max_files_per_trigger: int = 8,
 ) -> DataFrame:
     """Streaming twin of the health check's freshness data (http.go:129-150 +
@@ -160,7 +158,7 @@ def sink_freshness_stream(
     path), then a complete-mode max() aggregation — state is exactly one row
     per (token, series), the smallest possible streaming state."""
     stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
-    parsed = P.with_parsed(C.classify(stream), parser=parser)
+    parsed = P.with_parsed(C.classify(stream))
     load = (
         P.sink_dyno_load(parsed)
         .select("token", "time")
@@ -183,7 +181,6 @@ def start_freshness_stream(
     input_dir: str,
     out_dir: str,
     checkpoint_dir: str | None = None,
-    parser: str = "pandas",
     available_now: bool = False,
     trigger_seconds: int = 1,
     max_files_per_trigger: int = 8,
@@ -197,7 +194,7 @@ def start_freshness_stream(
     freshness_view() folds the log back to one row per (token, series) — the
     classic upsert-log + compaction-view shape a parquet file sink supports
     at any scale (a table format would replace the log with MERGE)."""
-    agg_df = sink_freshness_stream(spark, input_dir, parser, max_files_per_trigger)
+    agg_df = sink_freshness_stream(spark, input_dir, max_files_per_trigger)
     log_dir = os.path.join(out_dir, "metrics", "freshness_log")
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
@@ -277,7 +274,6 @@ def start_delivery_log_stream(
     input_dir: str,
     out_dir: str,
     checkpoint_dir: str | None = None,
-    parser: str = "pandas",
     watermark: str = "2 minutes",
     available_now: bool = False,
     trigger_seconds: int = 1,
@@ -293,7 +289,7 @@ def start_delivery_log_stream(
 
     stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
     cl = C.classify(stream).withWatermark("ts", watermark)
-    parsed = P.with_parsed(cl, parser=parser)
+    parsed = P.with_parsed(cl)
     rows = parsed.select(
         agg.sink_label_expr().alias("sink"), "token", "ts"
     ).filter(F.col("sink").isNotNull())
@@ -331,78 +327,6 @@ def windowed_rollup_stream(
         F.percentile_approx(
             F.regexp_extract("text", S.ROUTER_INT_KEYS["service"], 1).cast("int"), 0.5
         ).alias("p50_service"),
-    )
-
-
-def conv_running_stats_tws(
-    spark: SparkSession,
-    input_dir: str,
-    max_files_per_trigger: int = 2,
-):
-    """Spark-4 modernization twin of conv_running_stats_stream: identical
-    per-conversation running-stats semantics and output contract, expressed
-    on transformWithStateInPandas — named, typed ValueState on the RocksDB
-    state store instead of applyInPandasWithState's single opaque tuple.
-    The new API is where custom stateful operators are headed (state
-    variables, TTL, timers, initial state); keeping both twins pinned to the
-    same batch truth documents the migration path without breaking the
-    existing one.
-
-    Requires (a) the RocksDB state-store provider
-    (spark.sql.streaming.stateStore.providerClass =
-    ...state.RocksDBStateStoreProvider — bundled with Spark, no extra jar);
-    transformWithState does not run on the default HDFS-backed store — the
-    caller owns that session conf (see tests/test_streaming.py); and (b) the
-    `protobuf` Python package: PySpark's state-server protocol
-    (pyspark/sql/streaming/proto/StateMessage_pb2.py) imports
-    google.protobuf, which THIS no-network sandbox does not ship — so the
-    runtime path is verified by the protobuf-gated test only where the
-    dependency exists (same auto-activating pattern as the Iceberg jar
-    gate). The applyInPandasWithState twin above remains the executed,
-    batch-pinned implementation here.
-
-    Scale shape: unchanged from the applyInPandasWithState twin — state
-    partitioned by conv_id, one shuffle, no cross-key traffic; RocksDB
-    additionally spills state to local disk, which is exactly what a
-    100 TB keyed-state operator needs."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _ConvStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # last event time rides as exact epoch micros (bigint): state
-            # roundtrips through Arrow, and integer micros can't pick up a
-            # tz/ns quirk the way a timestamp-typed state column could
-            self._st = handle.getValueState("conv_state", "n long, max_idx int, last_us long")
-
-        def handleInputRows(self, key, rows, timer_values):
-            n, max_idx, last_us = self._st.get() if self._st.exists() else (0, -1, 0)
-            for pdf in rows:
-                n += len(pdf)
-                max_idx = max(max_idx, int(pdf["turn_idx"].max()))
-                last_us = max(last_us, int(pdf["ts"].max().value // 1_000))
-            self._st.update((n, max_idx, last_us))
-            yield pd.DataFrame(
-                {
-                    "conv_id": [key[0]],
-                    "n_turns": [n],
-                    "max_turn_idx": [max_idx],
-                    "last_ts": [pd.Timestamp(last_us, unit="us")],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
-    return stream.groupBy("conv_id").transformWithStateInPandas(
-        statefulProcessor=_ConvStats(),
-        outputStructType="conv_id string, n_turns long, max_turn_idx int, last_ts timestamp",
-        outputMode="Update",
-        timeMode="None",
     )
 
 

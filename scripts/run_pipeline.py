@@ -2,7 +2,7 @@
 
   spark-submit --master <cluster> --py-files lumbermill_spark.zip \
       scripts/run_pipeline.py --input <transcripts_dir> --out <out_dir> \
-      [--parser pandas|native] [--sink parquet|noop] [--chunk-files N] \
+      [--sink parquet|noop] [--chunk-files N] \
       [--resume] [--buckets 16] [--salts 8]
 
 Prints a one-line JSON run report (rows in, per-sink rows, class counts,
@@ -24,7 +24,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--parser", default="pandas", choices=["pandas", "native"])
     ap.add_argument("--sink", default="parquet", choices=["parquet", "noop"])
     ap.add_argument("--chunk-files", type=int, default=None)
     ap.add_argument("--resume", action="store_true")
@@ -40,7 +39,6 @@ def main() -> None:
     spark = SparkSession.builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     cfg = pipeline.PipelineConfig(
-        parser=args.parser,
         sink_format=args.sink,
         n_buckets=args.buckets,
         n_salts=args.salts,

@@ -122,9 +122,8 @@ def tiny_rows():
         (C3, 2, "heroku", ROUTER_BARE_IN_QUOTES, "router"),
         (C3, 3, "heroku", MEM_QUOTED_TRAP, "web.8"),
         # canonical-tail fast-path misses → per-key fallback equivalence.
-        # (MEM_ODD_PREFIX lives in test_mega_fallback_suffix_keys instead:
-        # suffix-matched keys with a non-canonical prefix are outside
-        # native_fast's declared grammar.)
+        # (MEM_ODD_PREFIX, a suffix-matched key with a non-canonical prefix,
+        # is pinned by test_mega_fallback_suffix_keys.)
         (C3, 4, "heroku", ROUTER_SHUFFLED, "router"),
         (C3, 5, "heroku", ROUTER_TRAILING, "router"),
         (C3, 7, "heroku", RERR_NOT_HEAD, "router"),

@@ -27,6 +27,9 @@ TEXTS = [
     "repeat repeat repeat repeat",
     "unicode café naïve über",
 ]
+# one NULL-text doc after TEXTS: every impl must return a NULL signature for
+# it rather than abort the job
+NULL_DOC_ID = len(TEXTS)
 
 
 def _md5ab(s: str, b_digits: int) -> tuple[int, int]:
@@ -61,7 +64,8 @@ def py_simhash_bands(text: str) -> list[int]:
 
 def _df(spark):
     return spark.createDataFrame(
-        [(i, t) for i, t in enumerate(TEXTS)], "doc_id bigint, text string"
+        [(i, t) for i, t in enumerate(TEXTS)] + [(NULL_DOC_ID, None)],
+        "doc_id bigint, text string",
     )
 
 
@@ -70,28 +74,32 @@ def test_minhash_signatures_match_pure_python(spark):
 
     for impl in ("arrow", "native"):
         got = {
-            r["doc_id"]: list(r["sig"])
+            r["doc_id"]: None if r["sig"] is None else list(r["sig"])
             for r in dedup.minhash_signatures(_df(spark), impl=impl)
             .select("doc_id", "sig")
             .collect()
         }
         for i, t in enumerate(TEXTS):
             assert got[i] == py_minhash_sig(t), f"[{impl}] minhash sig mismatch for {t!r}"
+        assert got[NULL_DOC_ID] is None, f"[{impl}] NULL text must give a NULL sig"
 
 
 def test_simhash_bands_match_pure_python(spark):
     for impl in ("arrow", "native"):
         got = {
-            r["doc_id"]: list(r["bands"])
+            r["doc_id"]: None if r["bands"] is None else list(r["bands"])
             for r in dedup.simhash_signatures(_df(spark), impl=impl).collect()
         }
         for i, t in enumerate(TEXTS):
             assert got[i] == py_simhash_bands(t), f"[{impl}] simhash bands mismatch for {t!r}"
             assert all(0 <= b < (1 << 16) for b in got[i])
+        assert got[NULL_DOC_ID] is None, f"[{impl}] NULL text must give NULL bands"
 
 
 def test_minhash_shingles_are_distinct_ordered_sets(spark):
     rows = dedup.minhash_signatures(_df(spark)).select("doc_id", "shingles").collect()
+    assert [r["shingles"] for r in rows if r["doc_id"] == NULL_DOC_ID] == [None]
+    rows = [r for r in rows if r["doc_id"] != NULL_DOC_ID]
     for r in rows:
         sh = list(r["shingles"])
         assert len(sh) == len(set(sh))

@@ -120,6 +120,35 @@ def test_text_stats_basic(spark):
     assert 0.0 <= q[2] <= q[1] <= 1.0
 
 
+def test_post_shuffle_falls_back_when_plan_walk_fails():
+    """The plan walk uses private JVM APIs; when they fail, the answer is
+    "already shuffled" so _widen leaves the frame alone."""
+
+    class _NoJvmPlan:  # as under Spark Connect: no _jdf
+        @property
+        def _jdf(self):
+            raise AttributeError("_jdf")
+
+    assert textstats._post_shuffle(_NoJvmPlan()) is True
+
+
+def test_textstats_refuse_to_clobber_caller_columns(spark):
+    df = spark.createDataFrame([(1, "the fox", "mine")], ["doc_id", "text", "_lc"])
+    with pytest.raises(ValueError, match="'_lc'"):
+        textstats.with_langid(df)
+    df = spark.createDataFrame([(1, "the fox", 7)], ["doc_id", "text", "_q_ntok"])
+    with pytest.raises(ValueError, match="'_q_ntok'"):
+        textstats.with_quality(df)
+
+
+def test_centroid_collect_is_capped(spark, embeds, monkeypatch):
+    monkeypatch.setattr(similarity, "MAX_CENTROIDS", similarity.IVF_CENTROIDS)
+    similarity.topk_ivf(embeds)  # exactly at the cap: builds
+    monkeypatch.setattr(similarity, "MAX_CENTROIDS", similarity.IVF_CENTROIDS - 1)
+    with pytest.raises(ValueError, match="MAX_CENTROIDS"):
+        similarity.topk_ivf(embeds)
+
+
 def test_mm_stub_deterministic_and_md5(spark, docs):
     import hashlib
 

@@ -1,5 +1,5 @@
 """Property fuzz: for arbitrary text INSIDE the engine's declared logfmt
-grammar, both Spark parser variants must agree with the pure-Python oracle on
+grammar, the Spark parser must agree with the pure-Python oracle on
 every sink row and every counter — not just on the curated fixture corpus.
 
 Grammar boundary (found by an unconstrained run of this fuzz and documented
@@ -16,9 +16,9 @@ here as the engine's contract):
     too — the full unquote.go:86-119 table (schemas.ESCAPE_TABLE). The parity
     prefix consumes any pair as a two-byte unit, the drop rule strips pairs
     before counting quotes, and the quoted-branch extraction decodes them
-    (sentinel chain on the regex-only engines). backslash-uXXXX and invalid
-    escapes stay out of grammar: the numeric decode needs a callback the regex sides
-    lack (pinned by pytest goldens on the Python sides instead), and Go
+    (sentinel chain in the DuckDB SQL oracle). backslash-uXXXX and invalid
+    escapes stay out of grammar: the numeric decode needs a callback the SQL
+    oracle lacks (pinned by pytest goldens on the Python sides instead), and Go
     drops rows whose unquote fails where the engines decode literally;
   * every '"' must open/close a value span attached directly to its key
     (`k="..."`). A quote NOT immediately after '=' is garbage to the Go
@@ -115,11 +115,10 @@ def test_parsers_match_oracle_on_fuzzed_lines(spark, rows):
             for (c, i, r, x, tl, t) in rows
         ]
     )
-    for parser in ("pandas", "native", "native_fast"):
-        parsed = parse.with_parsed(classify.classify(df), parser=parser)
-        for name, builder in parse.SINK_BUILDERS.items():
-            got = sorted(tuple(r) for r in builder(parsed).collect())
-            want = sorted(map(tuple, exp_sinks[name]))
-            assert got == want, f"sink {name} mismatch ({parser})\nlines={ [r[3] for r in rows] }"
-        got_err = parsed.filter("p.parse_error").count()
-        assert got_err == exp_counters.get("logfmt_parse_error", 0), parser
+    parsed = parse.with_parsed(classify.classify(df))
+    for name, builder in parse.SINK_BUILDERS.items():
+        got = sorted(tuple(r) for r in builder(parsed).collect())
+        want = sorted(map(tuple, exp_sinks[name]))
+        assert got == want, f"sink {name} mismatch\nlines={ [r[3] for r in rows] }"
+    got_err = parsed.filter("p.parse_error").count()
+    assert got_err == exp_counters.get("logfmt_parse_error", 0)

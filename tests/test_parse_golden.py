@@ -1,4 +1,4 @@
-"""Golden equality: the distributed engine (both parser variants) must agree
+"""Golden equality: the distributed engine (the Arrow parser) must agree
 row-for-row and count-for-count with the pure-Python oracle implementing
 drain.go's exact branch logic (SURVEY §5 layers 1+3+4)."""
 
@@ -9,9 +9,9 @@ from tests.conftest import make_transcripts_df
 from tests.fixtures import tiny_rows
 
 
-def _spark_outputs(spark, parser):
+def _spark_outputs(spark):
     df = make_transcripts_df(spark, tiny_rows())
-    parsed = parse.with_parsed(classify.classify(df), parser=parser)
+    parsed = parse.with_parsed(classify.classify(df))
     sinks = {name: sorted(tuple(r) for r in b(parsed).collect()) for name, b in parse.SINK_BUILDERS.items()}
     counts = {r["msg_class"]: r["count"] for r in parsed.groupBy("msg_class").count().collect()}
     counts["logfmt_parse_error"] = parsed.filter("p.parse_error").count()
@@ -27,29 +27,26 @@ def _oracle_outputs():
     return {k: sorted(map(tuple, v)) for k, v in sinks.items()}, counters
 
 
-@pytest.mark.parametrize("parser", ["pandas", "native", "native_fast"])
-def test_sinks_match_oracle(spark, parser):
-    got_sinks, got_counts = _spark_outputs(spark, parser)
+def test_sinks_match_oracle(spark):
+    got_sinks, got_counts = _spark_outputs(spark)
     exp_sinks, exp_counters = _oracle_outputs()
     for name in exp_sinks:
-        assert got_sinks[name] == exp_sinks[name], f"sink {name} mismatch ({parser})"
+        assert got_sinks[name] == exp_sinks[name], f"sink {name} mismatch"
     # class counts (oracle counter names == msg_class values)
     for cls in ("router", "router_error", "router_blank", "dyno_error", "dyno_mem",
                 "dyno_load", "unknown_heroku", "unknown_user", "token_missing"):
-        assert got_counts.get(cls, 0) == exp_counters.get(cls, 0), f"count {cls} ({parser})"
+        assert got_counts.get(cls, 0) == exp_counters.get(cls, 0), f"count {cls}"
     assert got_counts["logfmt_parse_error"] == exp_counters.get("logfmt_parse_error", 0)
 
 
-@pytest.mark.parametrize("parser", ["pandas", "native"])
-def test_mega_fallback_suffix_keys(spark, parser):
+def test_mega_fallback_suffix_keys(spark):
     """A suffix-matched key with a non-canonical prefix must MISS the literal
     canonical-tail fast path (schemas.MEGA_MEM) and fall back to the
-    suffix-match per-key patterns — outside native_fast's declared grammar,
-    so only the two full-suffix-match parsers are pinned here."""
+    suffix-match per-key patterns."""
     from tests import fixtures as FX
 
     df = make_transcripts_df(spark, [(FX.C3, 0, "heroku", FX.MEM_ODD_PREFIX, "web.11", FX.T0)])
-    parsed = parse.with_parsed(classify.classify(df), parser=parser)
+    parsed = parse.with_parsed(classify.classify(df))
     (row,) = parse.sink_dyno_mem(parsed).collect()
     assert (row["source"], row["memory_total"], row["memory_rss"]) == ("web.11", 33.0, 11.0)
 
@@ -82,10 +79,9 @@ ESC_ROWS = [
 ]
 
 
-@pytest.mark.parametrize("parser", ["pandas", "native", "native_fast"])
-def test_escaped_quotes_match_oracle(spark, parser):
+def test_escaped_quotes_match_oracle(spark):
     df = make_transcripts_df(spark, ESC_ROWS)
-    parsed = parse.with_parsed(classify.classify(df), parser=parser)
+    parsed = parse.with_parsed(classify.classify(df))
     got_sinks = {name: sorted(tuple(r) for r in b(parsed).collect()) for name, b in parse.SINK_BUILDERS.items()}
     exp_sinks, exp_counters = oracle.process_rows(
         [
@@ -94,7 +90,7 @@ def test_escaped_quotes_match_oracle(spark, parser):
         ]
     )
     for name in exp_sinks:
-        assert got_sinks[name] == sorted(map(tuple, exp_sinks[name])), f"sink {name} ({parser})"
+        assert got_sinks[name] == sorted(map(tuple, exp_sinks[name])), f"sink {name}"
     assert parsed.filter("p.parse_error").count() == exp_counters.get("logfmt_parse_error", 0)
     # decode spot-checks (pin the oracle itself, not just agreement)
     mem = {r["source"] for r in parse.sink_dyno_mem(parsed).collect()}
@@ -107,7 +103,7 @@ def test_escaped_quotes_match_oracle(spark, parser):
 
 # --- control escapes inside quoted values (\b \f \n \r \t — the rest of
 # unquote.go:86-119's single-char table). In-contract since round 5: every
-# engine decodes them to the control byte (the regex-only sides via
+# engine decodes them to the control byte (the DuckDB SQL oracle via
 # schemas.ESCAPE_CHAIN's sentinel chain, the Python sides via the exact
 # walk), so an extracted source can carry a literal tab/newline.
 CTRL_ROWS = [
@@ -123,10 +119,9 @@ CTRL_ROWS = [
 ]
 
 
-@pytest.mark.parametrize("parser", ["pandas", "native", "native_fast"])
-def test_control_escapes_match_oracle(spark, parser):
+def test_control_escapes_match_oracle(spark):
     df = make_transcripts_df(spark, CTRL_ROWS)
-    parsed = parse.with_parsed(classify.classify(df), parser=parser)
+    parsed = parse.with_parsed(classify.classify(df))
     got_sinks = {name: sorted(tuple(r) for r in b(parsed).collect()) for name, b in parse.SINK_BUILDERS.items()}
     exp_sinks, exp_counters = oracle.process_rows(
         [
@@ -135,7 +130,7 @@ def test_control_escapes_match_oracle(spark, parser):
         ]
     )
     for name in exp_sinks:
-        assert got_sinks[name] == sorted(map(tuple, exp_sinks[name])), f"sink {name} ({parser})"
+        assert got_sinks[name] == sorted(map(tuple, exp_sinks[name])), f"sink {name}"
     assert parsed.filter("p.parse_error").count() == exp_counters.get("logfmt_parse_error", 0)
     # pin the decoded bytes themselves, not just agreement
     mem = {r["source"] for r in parse.sink_dyno_mem(parsed).collect()}
@@ -150,9 +145,9 @@ def test_control_escapes_duckdb_oracle_matches_scanner(tmp_path):
 
 def test_unicode_escapes_default_parser():
     """\\uXXXX decode (unquote.go:120-141) is exact on the Python sides only
-    (Arrow parser + scanner oracle); the regex-only engines leave \\u literal
+    (Arrow parser + scanner oracle); the DuckDB SQL oracle leaves \\u literal
     and datagen never emits it (schemas.py escape contract) — so it is
-    pinned here on the default parser rather than through the driver gate."""
+    pinned here on the parser rather than through the driver gate."""
     from lumbermill_spark.parse import _decode_escapes_py
     from lumbermill_spark.oracle import _unquote
 
@@ -248,7 +243,7 @@ def test_specific_policies(spark):
     from tests import fixtures as FX
 
     df = make_transcripts_df(spark, tiny_rows())
-    parsed = parse.with_parsed(classify.classify(df), parser="pandas")
+    parsed = parse.with_parsed(classify.classify(df))
 
     router = [(r["token"], r["status"], r["service"]) for r in parse.sink_router(parsed).collect()]
     # bad status / empty service / unterminated quote rows are GONE:

@@ -25,17 +25,9 @@ def test_enrich_uses_broadcast_join(spark):
 
 def test_single_arrow_exchange_per_sink(spark):
     df = spark.read.parquet(datagen.ensure_transcripts(0.001))
-    parsed = parse.with_parsed(classify.classify(df), "pandas")
+    parsed = parse.with_parsed(classify.classify(df))
     plan = _plan(parse.sink_router(parsed))
     assert plan.count("ArrowEvalPython") == 1, "parse must be ONE vectorized UDF pass"
-
-
-def test_native_parser_has_no_python(spark):
-    df = spark.read.parquet(datagen.ensure_transcripts(0.001))
-    parsed = parse.with_parsed(classify.classify(df), "native")
-    plan = _plan(parse.sink_router(parsed))
-    assert "Python" not in plan
-    assert "*(" in plan  # whole-stage-codegen'd spans
 
 
 def test_similarity_broadcasts_queries(spark):
@@ -52,7 +44,7 @@ def test_column_pruning_reaches_dim_scan(spark):
     needs the key (Catalyst column pruning through the broadcast join)."""
     df = spark.read.parquet(datagen.ensure_transcripts(0.001))
     out = enrich.enrich(classify.classify(df), enrich.load_dims(spark))
-    plan = _plan(parse.sink_router(parse.with_parsed(out, "pandas")))
+    plan = _plan(parse.sink_router(parse.with_parsed(out)))
     assert "ReadSchema: struct<tool:string>" in plan
 
 
@@ -73,7 +65,7 @@ def test_top_tokens_sorts_only_aggregated_counts(spark):
     from lumbermill_spark import aggregate
 
     df = spark.read.parquet(datagen.ensure_transcripts(0.001))
-    parsed = parse.with_parsed(classify.classify(df), "pandas")
+    parsed = parse.with_parsed(classify.classify(df))
     plan = _plan(aggregate.top_tokens(parse.sink_router(parsed)))
     # plans print top-down: the global rank Window must sit ABOVE the
     # partial/final count aggregation, i.e. it sorts per-token counts,

@@ -167,10 +167,12 @@ def commit_chunk(
     (
         lineage_df.withColumn("run_id", F.lit(run_id))
         .withColumn("chunk_id", F.lit(chunk_id))
-        # repartition(1), NOT coalesce(1): the frame comes from a driver-local
-        # createDataFrame whose 32 partitions each round-trip a Python worker;
-        # coalesce chains them into ONE serial task (~4.4 s for 9 rows),
-        # repartition evaluates them in parallel first (~0.5 s)
+        # repartition(1), NOT coalesce(1): a caller's frame built with
+        # createDataFrame from a Python list starts a Python worker for each
+        # of its partitions; coalesce would chain them into ONE serial task
+        # (~4.4 s for 9 rows at local[32]), repartition evaluates them in
+        # parallel first (~0.5 s). pipeline.run passes an Arrow-built frame,
+        # which starts no Python worker either way.
         .repartition(1)
         .write.mode("append")
         .partitionBy("chunk_id")

@@ -13,7 +13,14 @@ Shape of the plan (and why it scales):
   * fan-out writes go through the sinks.Sink seam: parquet appends
     partitioned by (chunk_id, md5 ``bucket``) — the consistent-hash ring
     analog (route.py) — or Iceberg's ``bucket(B, token)`` hidden
-    partitioning via sinks.IcebergSink when a catalog is configured;
+    partitioning via sinks.IcebergSink when a catalog is configured. Each
+    sink frame is hash-repartitioned on ``bucket`` (one file per chunk and
+    bucket) and AQE sizes the number of write tasks;
+  * the three metrics run in the same concurrent phase as the sink writes:
+    class counts and router error codes come from the collected summary
+    (drain.go:147 counts codes inline while parsing), the router rollup
+    from the cache. The driver-side frames are built from Arrow tables, so
+    no Python worker starts for them;
   * hot-key skew is neutralized by salted repartition before the write
     (north_rule), and AQE skew-join/coalesce is on (session.py);
   * losslessness: Spark spills, never drops (vs destination.go:38-44).
@@ -27,6 +34,8 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -45,7 +54,6 @@ class PipelineConfig:
     sink_format: str = "parquet"  # 'parquet' | 'noop' | 'iceberg' (sinks.py)
     n_buckets: int = 16
     n_salts: int = 8
-    repartition: int | None = None  # defaults to spark.sql.shuffle.partitions
     enrich: bool = True
     write_metrics: bool = True
     # max source files per chunk. None → DEFAULT_CHUNK_FILES: an unchunked
@@ -72,6 +80,9 @@ class PipelineConfig:
 # one chunk of paths at a time no matter how many files the input has
 DEFAULT_CHUNK_FILES = 1024
 
+# the per-chunk metric tables, each under out_dir/metrics/<name>
+METRICS = ("class_counts", "router_error_codes", "router_rollup")
+
 
 @dataclass
 class PipelineResult:
@@ -81,8 +92,8 @@ class PipelineResult:
     seconds: float
     chunks: int
     # wall-clock per phase, summed across chunks: summary (parse+counters),
-    # fanout_writes (sink writes + chained metric jobs, one concurrent
-    # phase), lineage
+    # fanout_writes (sink writes + metric jobs, one concurrent phase),
+    # lineage
     timings: dict[str, float] = field(default_factory=dict)
 
 
@@ -124,7 +135,7 @@ def run(
     # 4x the shuffle-partition count for the salted routing repartition: the
     # cached fan-out is re-scanned by several downstream jobs, and finer
     # cache partitions smooth straggler waves (measured ~15% at local[32])
-    nshuffle = cfg.repartition or 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+    nshuffle = 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # --- source file set (chunk + resume granularity)
     # NB: must be the same representation the lineage ledger stores
@@ -153,8 +164,7 @@ def run(
             done = lin.done_chunk_ids(spark, out_dir)
             owned = lin.owned_run_ids(spark, out_dir)
             for tbl_path in [_sink_dir(out_dir, s) for s in S.ALL_SINKS] + [
-                os.path.join(out_dir, "metrics", m)
-                for m in ("class_counts", "router_error_codes", "router_rollup")
+                os.path.join(out_dir, "metrics", m) for m in METRICS
             ]:
                 for cid in sorted(sink_writer.list_chunk_ids(spark, tbl_path) - done):
                     if cfg.orphan_scope != "all" and cid.rsplit("_", 1)[0] not in owned:
@@ -192,16 +202,18 @@ def run(
     rows_in = 0
     n_chunks = 0
     phases: dict[str, float] = {}
-    # The five sink writes (and the metric jobs chained onto them) are
-    # independent small projections over the shared cached parse pass:
+    # The five sink writes and the metric jobs are independent small
+    # jobs over the shared cached parse pass or the collected summary:
     # submitting them from concurrent threads keeps executor slots busy that
     # serial submission would leave idle between jobs (measured: the sink
     # writes are ~40% of the sf0.1 parquet run), and on a real cluster it
     # overlaps straggler tails across output jobs. ONE pool for the whole
     # run: a per-chunk pool would churn Python threads — and, under py4j's
     # pinned thread mode, matching JVM threads — once per chunk at
-    # 10^3-chunk scale
-    pool = ThreadPoolExecutor(max_workers=len(P.SINK_BUILDERS), thread_name_prefix="lm-write")
+    # 10^3-chunk scale. Sized to the fan-out's job list: 5 sinks + 3 metrics
+    pool = ThreadPoolExecutor(
+        max_workers=len(P.SINK_BUILDERS) + len(METRICS), thread_name_prefix="lm-write"
+    )
 
     def _phase(name: str, t_start: float) -> float:
         now = time.time()
@@ -269,29 +281,36 @@ def run(
             parsed = route.salted_repartition(parsed, nshuffle, salt=F.col("salt"))
             parsed = parsed.withColumn("msg_class", dec).drop("cls_id")
             parsed = parsed.drop("salt")
-            # the cache exists for the fan-out (6 downstream consumers in parquet
-            # mode); in noop mode the single fused aggregation is the only
-            # consumer, so building the columnar cache would be pure overhead
+            # the cache exists for the fan-out (the summary, 5 sinks and the
+            # router rollup read it in parquet mode); in noop mode the single
+            # fused aggregation is the only consumer, so building the columnar
+            # cache would be pure overhead
             materialize = cfg.sink_format != "noop"
             if materialize:
                 parsed = parsed.persist(cfg.storage_level)
             try:
                 tp = time.time()
                 # ONE grouped aggregation materializes the cache and yields the
-                # per-class counters, all five sink row counts, AND the lineage
-                # frame in a single job (driver-side derivation from a tiny
-                # grouped result — the map-side partial agg keeps it one scan)
+                # per-class counters, all five sink row counts, the router
+                # error codes AND the lineage frame in a single job
+                # (driver-side derivation from a tiny grouped result — the
+                # map-side partial agg keeps it one scan)
                 summary = (
                     parsed.groupBy(
                         "file_id",
                         "msg_class",
                         F.col("p.parse_error").alias("perr"),
                         (F.col("p.source") == "").alias("src_empty"),
+                        F.when(
+                            F.col("msg_class") == S.CLS_ROUTER_ERROR, F.col("p.error_code")
+                        ).alias("code"),
                     )
                     .count()
                     .collect()
                 )
                 chunk_counts: dict[str, int] = {}
+                chunk_sinks: dict[str, int] = {k: 0 for k in S.ALL_SINKS}
+                error_codes: dict[str | None, int] = {}
                 lineage_rows: dict[tuple[str, str], int] = {}
                 sink_of = {
                     S.CLS_ROUTER: S.SINK_ROUTER,
@@ -314,97 +333,88 @@ def run(
                     if sink and not r["perr"]:
                         if mc in (S.CLS_DYNO_MEM, S.CLS_DYNO_LOAD) and r["src_empty"]:
                             continue  # empty-source rows silently dropped (drain.go:201,232)
-                        totals[sink] += n
+                        chunk_sinks[sink] += n
+                        if mc == S.CLS_ROUTER_ERROR:
+                            # per-code counter of the rows the events_router
+                            # sink keeps, counted inline as in drain.go:147
+                            error_codes[r["code"]] = error_codes.get(r["code"], 0) + n
+                for k, v in chunk_sinks.items():
+                    totals[k] += v
 
                 tp = _phase("summary", tp)
-                # fan-out: 5 filtered projections over the cached parse pass.
-                # Each metric job is CHAINED onto the one sink write it
-                # actually depends on (error codes ← events_router, rollup ←
-                # router, class_counts ← nothing), so metrics overlap the
-                # other sinks' writes inside the same concurrent phase instead
-                # of waiting for a full barrier — one barrier total, and the
-                # lineage commit still lands strictly after every write.
+                # fan-out: 5 filtered projections over the cached parse pass
+                # plus the metric jobs, all in one concurrent phase — one
+                # barrier total, and the lineage commit still lands strictly
+                # after every write.
                 write_metrics = cfg.write_metrics and cfg.sink_format != "noop"
 
                 def _write_sink(sink_name: str, builder) -> None:
                     # shuffle each sink frame onto its bucket key right before
-                    # the write: one file per (chunk, bucket) instead of one per
-                    # (task, bucket) — measured 10,247 → ~100 files and 54 s →
-                    # ~35 s at sf0.1/local[32]. At 10^12 rows this is what keeps
-                    # the table listable; the extra exchange is tiny vs the
-                    # parse (sink rows are already filtered).
+                    # the write. Hash partitioning puts every bucket in exactly
+                    # one reduce partition, so each (chunk, bucket) gets one
+                    # file instead of one per (task, bucket) — measured 10,247
+                    # → ~100 files and 54 s → ~35 s at sf0.1/local[32]; at
+                    # 10^12 rows this is what keeps the table listable. No
+                    # partition count: AQE merges the reduce partitions into a
+                    # few write tasks, where a fixed n_buckets ran one task
+                    # per bucket — measured 16 → 4 tasks and 0.82 s → 0.38 s
+                    # for a 25k-row sink at local[4], same 16 files.
                     sdf = (
                         builder(parsed)
                         .withColumn("bucket", route.bucket_expr(F.col("token"), cfg.n_buckets))
-                        .repartition(cfg.n_buckets, "bucket")
+                        .repartition("bucket")
                     )
                     sink_writer.write(sdf, _sink_dir(out_dir, sink_name), chunk_id, "bucket")
 
-                # Metrics derive from what is ALREADY materialized — the way
-                # the reference's health checks and continuous queries read
-                # the written InfluxDB series, never the ingest stream:
-                #   * class_counts comes from the collected summary (a
-                #     driver-side dict — zero extra cluster jobs);
-                #   * error codes + rollup re-read the freshly written narrow
-                #     sink chunk (columnar, pre-filtered, ~KBs) instead of
-                #     rescanning the wide parse cache 3 more times. The
-                #     read-back goes through the Sink seam: read_chunk returns
-                #     None when the chunk wrote zero rows for that sink (an
-                #     empty parquet append creates no chunk_id partition — a
-                #     raw path read would crash with PATH_NOT_FOUND) and it
-                #     resolves catalog tables for the Iceberg sink.
+                def _write_metric(name: str, mdf: DataFrame) -> None:
+                    sink_writer.write(mdf, os.path.join(out_dir, "metrics", name), chunk_id, None)
+
+                # Metrics cost no read-back of a written sink:
+                #   * class_counts and router_error_codes come from the
+                #     collected summary. Their frames are built from Arrow
+                #     tables — the JVM reads the batches itself, where a
+                #     frame built from a Python list starts a Python worker
+                #     per partition (measured ~1.2 s vs ~0.23 s per ~18-row
+                #     write at local[4]);
+                #   * router_rollup aggregates the router projection of the
+                #     cache, concurrently with the sink writes.
+                # A metric with no rows for this chunk is not written, as an
+                # empty sink append writes no chunk_id partition.
                 def _m_class_counts() -> None:
+                    counters = sorted(chunk_counts)
                     cdf = spark.createDataFrame(
-                        sorted(chunk_counts.items()), "counter string, n long"
+                        pa.table({"counter": counters, "n": [chunk_counts[k] for k in counters]}),
+                        "counter string, n long",
                     )
-                    sink_writer.write(
-                        cdf.repartition(1),  # not coalesce: see lineage.commit_chunk
-                        os.path.join(out_dir, "metrics", "class_counts"),
-                        chunk_id,
-                        None,
-                    )
+                    _write_metric("class_counts", cdf.coalesce(1))
 
                 def _m_error_codes() -> None:
-                    er_chunk = sink_writer.read_chunk(
-                        spark, _sink_dir(out_dir, S.SINK_EVENTS_ROUTER), chunk_id
+                    edf = spark.createDataFrame(
+                        pa.table({"code": list(error_codes), "n": list(error_codes.values())}),
+                        "code string, n long",
                     )
-                    if er_chunk is not None:
-                        sink_writer.write(
-                            er_chunk.groupBy("code").agg(F.count("*").alias("n")).coalesce(1),
-                            os.path.join(out_dir, "metrics", "router_error_codes"),
-                            chunk_id,
-                            None,
-                        )
+                    _write_metric("router_error_codes", edf.coalesce(1))
 
                 def _m_router_rollup() -> None:
-                    router_chunk = sink_writer.read_chunk(
-                        spark, _sink_dir(out_dir, S.SINK_ROUTER), chunk_id
+                    _write_metric(
+                        "router_rollup", agg.router_rollup(P.sink_router(parsed)).coalesce(4)
                     )
-                    if router_chunk is not None:
-                        sink_writer.write(
-                            agg.router_rollup(router_chunk).coalesce(4),
-                            os.path.join(out_dir, "metrics", "router_rollup"),
-                            chunk_id,
-                            None,
-                        )
-
-                _metric_after = {
-                    S.SINK_EVENTS_ROUTER: _m_error_codes,
-                    S.SINK_ROUTER: _m_router_rollup,
-                }
-
-                def _sink_job(sink_name: str, builder) -> None:
-                    _write_sink(sink_name, builder)
-                    if write_metrics and sink_name in _metric_after:
-                        _metric_after[sink_name]()
 
                 jobs = [
-                    (lambda n=name, b=builder: _sink_job(n, b))
+                    (lambda n=name, b=builder: _write_sink(n, b))
                     for name, builder in P.SINK_BUILDERS.items()
                 ]
                 if write_metrics:
                     jobs.append(_m_class_counts)
-                for f in [pool.submit(j) for j in jobs]:
+                    if error_codes:
+                        jobs.append(_m_error_codes)
+                    if chunk_sinks[S.SINK_ROUTER]:
+                        jobs.append(_m_router_rollup)
+                # inheritable_thread_target copies this thread's local
+                # properties (job group, description) into each pool job, so
+                # the fan-out's Spark jobs carry the caller's labels
+                futures = [pool.submit(inheritable_thread_target(spark)(j)) for j in jobs]
+                for f in futures:
                     f.result()  # re-raise the first failure
 
                 tp = _phase("fanout_writes", tp)
@@ -414,8 +424,11 @@ def run(
                 # lineage ledger commit — AFTER sink writes succeeded (from the
                 # already-collected summary; no extra cluster job)
                 if cfg.sink_format != "noop":
+                    ledger = sorted(lineage_rows.items())
                     ldf = spark.createDataFrame(
-                        [(f, m, n) for (f, m), n in sorted(lineage_rows.items())],
+                        pa.table({"source_file": [f for (f, _), _ in ledger],
+                                  "msg_class": [m for (_, m), _ in ledger],
+                                  "rows": [n for _, n in ledger]}),
                         "source_file string, msg_class string, rows long",
                     )
                     lin.commit_chunk(spark, out_dir, run_id, chunk_id, ldf)

@@ -18,8 +18,9 @@ Three implementations behind one interface:
   #22): counts flow through the metrics aggregation, bytes go nowhere.
 
 At 10^12 rows the writer choice decides small-file behavior: ParquetSink
-relies on the upstream salted repartition to bound files per bucket;
-IcebergSink would use its own fanout-write + table maintenance instead.
+relies on the pipeline's per-sink bucket repartition for one file per
+(chunk, bucket); IcebergSink would use its own fanout-write + table
+maintenance instead.
 """
 
 from __future__ import annotations
@@ -62,8 +63,9 @@ class Sink:
         The guard matters: an all-empty parquet append creates no
         ``chunk_id=<id>`` partition directory (only _SUCCESS), so a naive
         path read throws PATH_NOT_FOUND — a chunk with zero router-error
-        rows would crash the metrics step (round-3 advice, high). Metrics
-        read-back must come through this seam, never a raw path read."""
+        rows crashed the metrics step when it still read sinks back
+        (round-3 advice, high). Read a chunk back through this seam, never
+        a raw path read."""
         return None
 
     def list_chunk_ids(self, spark, path: str) -> set[str]:

@@ -1,6 +1,7 @@
 """End-to-end pipeline + lineage/resume semantics (the graceful-shutdown /
 exactly-once analog, SURVEY §2.1 #28)."""
 
+import glob
 import os
 
 import pytest
@@ -27,6 +28,12 @@ def test_run_and_resume(spark, small_input, tmp_path):
     assert sum(v for k, v in res.class_counts.items() if k not in ("lines", "logfmt_parse_error")) == 4000
     n1 = spark.read.parquet(os.path.join(out, "sinks", "router")).count()
     assert n1 == res.sink_rows["router"] > 0
+    # one file per (chunk, bucket): the per-sink bucket shuffle must put each
+    # bucket in exactly one write task, however many tasks AQE runs
+    bucket_dirs = glob.glob(os.path.join(out, "sinks", "*", "chunk_id=*", "bucket=*"))
+    assert bucket_dirs
+    for d in bucket_dirs:
+        assert len(glob.glob(os.path.join(d, "part-*.parquet"))) == 1, d
 
     # full resume: nothing left to do, sinks unchanged
     res2 = pipeline.run(spark, small_input, out, cfg, resume=True)
@@ -74,9 +81,10 @@ def test_noop_sink(spark, small_input, tmp_path):
 
 
 def test_empty_sink_chunk_does_not_crash_metrics(spark, small_input, tmp_path):
-    """A chunk with ZERO rows for a sink writes no chunk_id partition; the
-    metrics read-back must skip it, not crash with PATH_NOT_FOUND (round-3
-    advice, high). Input: rows that can never classify as router_error."""
+    """A chunk with ZERO rows for a sink writes no chunk_id partition, and
+    the metric derived from that sink (router_error_codes) is skipped
+    rather than written empty or crashing (round-3 advice, high). Input:
+    rows that can never classify as router_error."""
     from pyspark.sql import functions as F
 
     src = str(tmp_path / "no_router_err")
@@ -98,6 +106,61 @@ def test_empty_sink_chunk_does_not_crash_metrics(spark, small_input, tmp_path):
     assert not os.path.isdir(os.path.join(out, "metrics", "router_error_codes"))
     # the other metrics were still written
     assert spark.read.parquet(os.path.join(out, "metrics", "class_counts")).count() > 0
+
+
+def test_metrics_match_oracles(spark, small_input, tmp_path):
+    """One single-chunk run: the class_counts, router_error_codes and
+    router_rollup metrics equal their DuckDB oracles. Counts match exactly;
+    rounded floats may differ by one unit in the 6th decimal, where Spark's
+    round() (half up on the decimal string) and DuckDB's (on the binary
+    double) split an exact half differently."""
+    import duckdb
+
+    from lumbermill_spark import oracle_sql
+
+    out = str(tmp_path / "out9")
+    res = pipeline.run(spark, small_input, out, pipeline.PipelineConfig())
+    assert res.chunks == 1
+    src = os.path.join(small_input, "*.parquet")
+    con = duckdb.connect()
+    try:
+        for name, sql in (
+            ("class_counts", oracle_sql.class_counts(src)),
+            ("router_error_codes", oracle_sql.router_error_code_counts(src)),
+            ("router_rollup", oracle_sql.router_rollup(src)),
+        ):
+            cur = con.execute(sql)
+            cols = [d[0] for d in cur.description]
+            want = {r[0]: r[1:] for r in cur.fetchall()}
+            got = {
+                r[0]: tuple(r[1:])
+                for r in spark.read.parquet(os.path.join(out, "metrics", name)).select(*cols).collect()
+            }
+            assert got.keys() == want.keys(), name
+            for k, w in want.items():
+                # 1e-6 plus float slack: two 6-decimal doubles one unit apart
+                # can differ by slightly more than 1e-6
+                assert got[k] == tuple(
+                    pytest.approx(v, abs=1.000001e-6) if isinstance(v, float) else v for v in w
+                ), (name, k)
+    finally:
+        con.close()
+
+
+def test_fanout_jobs_inherit_job_group(spark, small_input, tmp_path):
+    """Jobs submitted from the fan-out thread pool carry the caller's job
+    group: no job of the run is left without one."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("lm-fanout-test", "pipeline.run")
+    try:
+        pipeline.run(spark, small_input, str(tmp_path / "out10"), pipeline.PipelineConfig())
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert tracker.getJobIdsForGroup("lm-fanout-test")
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
 
 
 def test_resume_antijoin_many_files(spark, small_input, tmp_path):

@@ -193,7 +193,9 @@ def ngram_jaccard_pairs(
     )
     # trigram sets only for docs that reached a candidate pair (the same
     # survivors-only re-attach as minhash_lsh_pairs: no per-doc gram
-    # arrays persisted corpus-wide, no text shuffle — broadcast semi-join)
+    # arrays persisted corpus-wide). The pair-id set has no size bound, so
+    # the join carries no broadcast hint: the planner broadcasts it when its
+    # measured size is under the threshold and shuffles it otherwise.
     if materialize:
         cand = cand.localCheckpoint(eager=True)
     pair_ids = (
@@ -203,7 +205,7 @@ def ngram_jaccard_pairs(
     )
     g = (
         docs.select("doc_id", "text")
-        .join(F.broadcast(pair_ids), "doc_id")
+        .join(pair_ids, "doc_id")
         .select("doc_id", F.expr(TRIGRAMS_EXPR).alias("grams"))
     )
     if materialize:
@@ -508,9 +510,10 @@ def minhash_lsh_pairs(
     materializing per-doc shingle strings for the whole corpus cost ~45 s
     of Arrow→array re-assembly at sf1 (556k prefix-capped conversations)
     when only the estimate-filter SURVIVORS ever need them. Verification
-    re-attaches text for just those docs via a broadcast semi-join on the
-    tiny pair-id set and rebuilds their shingle sets JVM-side — the exact
-    same per-doc sets, so sim values are unchanged (oracle-pinned)."""
+    re-attaches text for just those docs via a join on the pair-id set
+    (broadcast by the planner while that set is small; it has no size bound,
+    so it is not hinted) and rebuilds their shingle sets JVM-side — the
+    exact same per-doc sets, so sim values are unchanged (oracle-pinned)."""
     sigs = (
         _widen(docs.select("doc_id", "text"))
         .select("doc_id", _minhash_sig_from_text(F.col("text")).alias("sig"))
@@ -543,9 +546,9 @@ def minhash_lsh_pairs(
     )
     # stage 3: exact verification on the survivors only — the pair-id set
     # is materialized (tiny) so its two consumers don't recompute the
-    # band join, then text is re-attached for JUST those docs via a
-    # broadcast semi-join (the corpus scan never shuffles its text), and
-    # their shingle sets are rebuilt JVM-side.
+    # band join, then text is re-attached for JUST those docs via a join
+    # the planner sizes (no broadcast hint: the survivor set is unbounded),
+    # and their shingle sets are rebuilt JVM-side.
     if materialize:
         est_pairs = est_pairs.localCheckpoint(eager=True)
     pair_ids = (
@@ -555,7 +558,7 @@ def minhash_lsh_pairs(
     )
     sh = (
         docs.select("doc_id", "text")
-        .join(F.broadcast(pair_ids), "doc_id")
+        .join(pair_ids, "doc_id")
         .select("doc_id", F.expr(SHINGLES_EXPR).alias("shingles"))
     )
     if materialize:

@@ -1,18 +1,38 @@
 """Text analysis over the documents table: token counting, quality scoring,
-language-ID heuristic, document fingerprinting.
+language-ID heuristic, repetition signals, document fingerprinting and the
+corpus-curation operators built on them.
 
-Everything here is native Catalyst expressions (regexp_count / regexp_replace
-/ md5) — whole-stage-codegen'd, zero Python on the hot path. Each op has an
-exactly-equivalent DuckDB SQL oracle; the regex/stopword constants below are
-the single source of truth for both sides (oracle built in oracle_extras.py).
+Most operators are native Catalyst expressions (regexp_count /
+regexp_replace / md5). The per-document lexical counts behind quality,
+langid and repetition come from ONE Arrow UDF (`lexical_counts_udf`): a
+byte-class pass, four RE2 stopword counts over one lower-cased copy and the
+repetition counting core, all per Arrow batch. Only exact integers cross
+the Python boundary; every float op (ratios, score, 6-dp rounds,
+thresholds) stays in Catalyst. A few other kernels (shingles, and the
+dedup/similarity ones) are still vectorized Python UDFs.
+
+Each op has an exactly-equivalent DuckDB SQL oracle; the regex/stopword
+constants below are the single source of truth for both sides (oracle built
+in oracle_extras.py).
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas
+import pyarrow as pa
+import pyarrow.compute as pc
 from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf
+
+# The signal Columns below are pure functions of column names, built node by
+# node over py4j: rebuilt per call they cost corpus_curate about 2,000 round
+# trips and 0.3 s of driver time. One instance per SparkContext is reused,
+# as with_parsed reuses its parse Column.
+from ..parse import _cached_exprs
 
 # BPE-ish tokenization: runs of alphanumerics OR single non-space symbols
 BPE_TOKEN_PAT = r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"
@@ -97,8 +117,14 @@ def _widen(df: DataFrame, key: str = "doc_id") -> DataFrame:
 
 
 def ws_token_count(text: Column) -> Column:
+    """Whitespace tokens of the space-trimmed text: 0 when it is blank,
+    NULL when it is NULL (Spark's size(NULL) would leak -1 there)."""
     t = F.trim(text)
-    return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+"))).cast("int")
+    return (
+        F.when(t == "", F.lit(0))
+        .when(t.isNotNull(), F.size(F.split(t, r"\s+")))
+        .cast("int")
+    )
 
 
 _BPE_KEEP_CHARS = (
@@ -130,11 +156,11 @@ def fingerprint(text: Column) -> Column:
 
 
 def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    df = _widen(df)
-    t = F.col(text_col)
-    return df.withColumn("n_ws_tokens", ws_token_count(t)).withColumn(
-        "n_bpe_tokens", bpe_token_count(t)
-    )
+    def build():
+        t = F.col(text_col)
+        return {"n_ws_tokens": ws_token_count(t), "n_bpe_tokens": bpe_token_count(t)}
+
+    return _widen(df).withColumns(_cached_exprs(("tokens", text_col), build))
 
 
 def _require_absent(df: DataFrame, names) -> None:
@@ -147,37 +173,126 @@ def _require_absent(df: DataFrame, names) -> None:
             raise ValueError(f"input already has a column {c!r}, which this operator uses internally")
 
 
-def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Quality score ∈ [0,1]: alpha density, low punctuation, stopword
-    presence, length — the standard cheap pre-filter for corpus curation."""
-    df = _widen(df)
+# ---------------------------------------------------------------------------
+# lexical counts — the per-document integers behind with_quality,
+# with_langid and with_repetition, computed by ONE Arrow UDF per batch:
+#   alpha, punct   [A-Za-z] chars and [^\w\s] chars. Both classes are ASCII
+#                  (Java and RE2 \w are [A-Za-z0-9_] without their Unicode
+#                  flags), so they are byte-class counts: a UTF-8 lead or
+#                  ASCII byte outside \w∪\s is one [^\w\s] char, a
+#                  continuation byte is part of the char before it. \s is
+#                  Java's 6 ASCII whitespace chars, the contract every
+#                  whitespace split in this module keeps.
+#   stop_<lang>    stopword_pat(lang) hits over one utf8_lower copy, counted
+#                  by RE2 (pc.count_substring_regex) — the DuckDB oracle's
+#                  regex engine, whose ASCII \b java.util.regex does not
+#                  share: Java counts 'é' as a word char, so 'éthe' held no
+#                  'the' there while RE2 and DuckDB find one.
+#   nw … top       the 7 repetition counts of _rep_counts_kernel.
+# NULL text gives NULL alpha/punct/stop counts (as length/regexp_count of
+# NULL did) and zero repetition counts (as the split of NULL did).
+# The struct is staged as the column _SIG and the three operators read its
+# fields, so _with_curate_signals runs the kernel once per row where the
+# Catalyst forms made six Java-regex scans, two translate passes and a
+# pandas-UDF round-trip.
+# ---------------------------------------------------------------------------
+
+_SIG = "_lc"  # staged lexical-counts struct
+_REP_FIELDS = ("nw", "dw", "n2", "d2", "n3", "d3", "top")
+_LEX_FIELDS = ("alpha", "punct") + tuple("stop_" + lang for lang in LANG_ORDER) + _REP_FIELDS
+_LEX_STRUCT = T.StructType([T.StructField(f, T.IntegerType()) for f in _LEX_FIELDS])
+
+# per-byte increments packed as alpha + (punct << 32): one cumulative sum
+# over a batch's UTF-8 bytes yields both counts for every row
+_BYTE_CLASS = np.ones(256, dtype=np.uint64) << np.uint64(32)
+_BYTE_CLASS[list(_WORD_WS_CHARS.encode())] = 0
+_BYTE_CLASS[0x80:0xC0] = 0  # UTF-8 continuation bytes
+_BYTE_CLASS[list(_ALPHA_CHARS.encode())] = 1
+
+
+def _byte_class_counts(text: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(alpha, punct) counts per row of a string array; NULL rows hold
+    whatever bytes their slots span and are masked by the caller."""
+    large = pa.types.is_large_string(text.type)
+    _, offsets, data = text.buffers()
+    off = np.frombuffer(offsets, np.int64 if large else np.int32)[text.offset : text.offset + len(text) + 1]
+    data = np.frombuffer(data, np.uint8) if data is not None else np.zeros(0, np.uint8)
+    cum = np.zeros(len(data) + 1, dtype=np.uint64)
+    np.cumsum(_BYTE_CLASS[data], out=cum[1:])
+    packed = cum[off[1:]] - cum[off[:-1]]
+    return (packed & np.uint64(0xFFFFFFFF)).astype(np.int32), (packed >> np.uint64(32)).astype(np.int32)
+
+
+@arrow_udf(_LEX_STRUCT)
+def lexical_counts_udf(text: pa.Array) -> pa.Array:
+    """One document batch → its _LEX_STRUCT counts (see the block comment
+    above). An arrow_udf like parse.parse_fields_udf: the batch stays Arrow
+    end to end and no Python loop runs per document."""
+    # the return hint stays pa.Array: pa.StructArray would type this as an
+    # aggregate (see parse.parse_fields_udf)
+    null = pc.is_null(text).to_numpy(zero_copy_only=False)
+    cols = [pa.array(c, mask=null) for c in _byte_class_counts(text)]
+    lower = pc.utf8_lower(text)
+    cols += [pc.count_substring_regex(lower, stopword_pat(lang)) for lang in LANG_ORDER]
+    rep = _rep_counts_kernel(text)
+    cols += [pa.array(rep[:, i]) for i in range(len(_REP_FIELDS))]
+    return pa.StructArray.from_arrays(cols, names=list(_LEX_FIELDS))
+
+
+# Deterministic, marked otherwise as an optimizer fence (parse.py does the
+# same): a filter over one derived column would otherwise be pushed below
+# the staged struct with the UDF call cloned into it — two kernel runs.
+_lexical_counts_once = lexical_counts_udf.asNondeterministic()
+
+
+def _stage_signals(df: DataFrame, text_col: str) -> DataFrame:
+    _require_absent(df, (_SIG,))
+    lex = _cached_exprs(("lex", text_col), lambda: _lexical_counts_once(F.col(text_col)))
+    return _widen(df).withColumn(_SIG, lex)
+
+
+def _round6(x: Column) -> Column:
+    """6-dp round of a non-negative double as DuckDB's round(x, 6) does it:
+    scale by 1e6, round half away from zero, scale back. Spark's round(x, 6)
+    rounds the double's decimal string half up, which splits exact binary
+    halves the other way (about one rendered conversation in 1250)."""
+    return F.round(x * 1e6, 0) / 1e6
+
+
+def _quality_exprs(text_col: str, counts: str, n_ws_col: str | None) -> tuple[dict, dict]:
+    """(staged temps, output columns) of with_quality. `counts` names the
+    source of the [A-Za-z], [^\\w\\s] and English-stopword counts: "lex"
+    reads the staged _SIG; "jvm" takes them by Catalyst expressions, for
+    plans that must stay free of Python (corpus_datacard). There the char
+    classes are translate length differences (translate deletes exactly the
+    [A-Za-z] chars, or leaves exactly the [^\\w\\s] ones) and the stopword
+    word boundaries are spelled as ASCII lookarounds, so java.util.regex
+    counts what RE2 counts; Java lower-cases a few characters ('İ')
+    differently from utf8proc, the one difference left. `n_ws_col` names
+    an already-computed ws_token_count column, if any."""
     t = F.col(text_col)
+    if counts == "lex":
+        lex = F.col(_SIG)
+        alpha, punct, stop = lex["alpha"], lex["punct"], lex["stop_en"]
+    else:
+        alpha = F.length(t) - F.length(F.translate(t, _ALPHA_CHARS, ""))
+        punct = F.length(F.translate(t, _WORD_WS_CHARS, ""))
+        words = "|".join(STOPWORDS["en"])
+        stop = F.regexp_count(F.lower(t), F.lit(f"(?<![A-Za-z0-9_])({words})(?![A-Za-z0-9_])"))
+    n_ws = F.col(n_ws_col) if n_ws_col else ws_token_count(t)
     length = F.greatest(F.length(t), F.lit(1)).cast("double")
-    ntok = F.greatest(ws_token_count(t), F.lit(1)).cast("double")
-    # single-char-class counts via translate length-difference instead of
-    # regexp_count (the bpe_token_count trick): [A-Za-z] matches are exactly
-    # the chars deleted by translate(t, alphabet, ''); [^\w\s] matches are
-    # exactly the chars REMAINING after deleting the \w∪\s set (java \w =
-    # [A-Za-z0-9_], \s = the 6 ASCII ws chars — both ASCII-only without
-    # UNICODE_CHARACTER_CLASS, so the complement identity holds for every
-    # input). Same integers, no java-regex scan, ~3× on long rendered docs.
-    # Each non-cheap signal is STAGED as a column and referenced as an
-    # attribute below: inlined expression trees repeated the translate /
-    # regexp_count / split subtrees inside round(...) AND the score sum,
-    # and once the fused curation projection grew past the codegen method
-    # limit those duplicates were re-evaluated per reference (measured 5×
-    # on sf1 rendered conversations — 63 s → 300 s when one more column
-    # joined the projection). CollapseProject keeps a staged column staged
-    # exactly when it is non-cheap and multi-referenced, which all of
-    # these are. Same float ops in the same order — values bit-identical.
+    # Each signal is STAGED as a column and referenced as an attribute
+    # below: inlined, the ratios and ws_token_count's split would repeat
+    # inside round(...) AND the score sum, and once a fused curation
+    # projection outgrows the codegen method limit duplicates are
+    # re-evaluated per reference (measured 5× on sf1 rendered
+    # conversations). Same float ops in the same order as the oracle.
     temps = {
-        "_q_alpha": (F.length(t) - F.length(F.translate(t, _ALPHA_CHARS, ""))) / length,
-        "_q_punct": F.length(F.translate(t, _WORD_WS_CHARS, "")) / length,
-        "_q_stop": F.regexp_count(F.lower(t), F.lit(stopword_pat("en"))).cast("double"),
-        "_q_ntok": ntok,
+        "_q_alpha": alpha / length,
+        "_q_punct": punct / length,
+        "_q_stop": stop.cast("double"),
+        "_q_ntok": F.greatest(n_ws, F.lit(1)).cast("double"),
     }
-    _require_absent(df, temps)
-    df = df.withColumns(temps)
     alpha_ratio = F.col("_q_alpha")
     punct_ratio = F.col("_q_punct")
     stop_frac = F.least(F.col("_q_stop") / F.col("_q_ntok"), F.lit(1.0))
@@ -187,39 +302,63 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
         + 0.25 * stop_frac
         + 0.25 * F.least(F.col("_q_ntok") / 100.0, F.lit(1.0))
     )
-    return (
-        df.withColumn("alpha_ratio", F.round(alpha_ratio, 6))
-        .withColumn("punct_ratio", F.round(punct_ratio, 6))
-        .withColumn("stopword_frac", F.round(stop_frac, 6))
-        .withColumn("quality_score", F.round(score, 6))
-        .drop(*temps.keys())
-    )
+    outs = {
+        "alpha_ratio": _round6(alpha_ratio),
+        "punct_ratio": _round6(punct_ratio),
+        "stopword_frac": _round6(stop_frac),
+        "quality_score": _round6(score),
+    }
+    return temps, outs
 
 
-def with_langid(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Stopword-hit language ID with fixed-precedence argmax ('und' if no
-    hits anywhere)."""
-    _require_absent(df, ("_lc",))
-    df = _widen(df)
-    # STAGED evaluation (see with_quality): lower(text) once, each lang's
-    # regexp_count once as a column; the argmax when-chain reads attributes.
-    # The inlined form embedded every count ~16× inside pred_lang's CASE
-    # tree — fine while codegen CSE holds, 4 regex scans × 4 re-evaluations
-    # once the fused projection falls out of codegen. Same counts, same
-    # precedence — values identical.
-    out = df.withColumn("_lc", F.lower(F.col(text_col)))
-    for lang in LANG_ORDER:
-        out = out.withColumn(
-            "score_" + lang,
-            F.regexp_count(F.col("_lc"), F.lit(stopword_pat(lang))).cast("int"),
-        )
+def _quality_cols(
+    df: DataFrame, text_col: str, counts: str = "lex", n_ws_col: str | None = None
+) -> DataFrame:
+    """with_quality's columns (see _quality_exprs for the arguments)."""
+    key = ("quality", text_col, counts, n_ws_col)
+    temps, outs = _cached_exprs(key, lambda: _quality_exprs(text_col, counts, n_ws_col))
+    _require_absent(df, temps)
+    return df.withColumns(temps).withColumns(outs).drop(*temps)
+
+
+def _langid_exprs() -> tuple[dict, Column]:
+    lex = F.col(_SIG)
     scores = {lang: F.col("score_" + lang) for lang in LANG_ORDER}
     best = F.greatest(*scores.values())
     pred = F.lit("und")
     for lang in reversed(LANG_ORDER):  # build when-chain in priority order
         pred = F.when(scores[lang] == best, F.lit(lang)).otherwise(pred)
     pred = F.when(best == 0, F.lit("und")).otherwise(pred)
-    return out.withColumn("pred_lang", pred).drop("_lc")
+    return {"score_" + lang: lex["stop_" + lang] for lang in LANG_ORDER}, pred
+
+
+def _langid_cols(df: DataFrame) -> DataFrame:
+    """with_langid's columns over a frame carrying the staged _SIG."""
+    scores, pred = _cached_exprs(("langid",), _langid_exprs)
+    return df.withColumns(scores).withColumn("pred_lang", pred)
+
+
+def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Quality score ∈ [0,1]: alpha density, low punctuation, stopword
+    presence, length — the standard cheap pre-filter for corpus curation.
+    Adds alpha_ratio, punct_ratio, stopword_frac and quality_score, each
+    rounded to 6 dp as DuckDB's round does. The three counts come from
+    lexical_counts_udf (English stopwords by RE2's ASCII \\b); the ws-token
+    count and every float op are Catalyst."""
+    return _quality_cols(_stage_signals(df, text_col), text_col).drop(_SIG)
+
+
+def _with_quality_jvm(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """with_quality with no Python in its plan (see _quality_exprs)."""
+    return _quality_cols(_widen(df), text_col, counts="jvm")
+
+
+def with_langid(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Stopword-hit language ID: score_<lang> is the RE2 count of
+    stopword_pat(lang) over the lower-cased text (from lexical_counts_udf),
+    pred_lang the fixed-precedence argmax over LANG_ORDER ('und' if no hits
+    anywhere or the text is NULL)."""
+    return _langid_cols(_stage_signals(df, text_col)).drop(_SIG)
 
 
 # ---------------------------------------------------------------------------
@@ -443,12 +582,11 @@ def decontaminate(
 # repetition filtering — the Gopher/MassiveText-style intra-document
 # repetition signals (duplicate word / n-gram fractions, top-word share)
 # used to drop degenerate boilerplate before pre-training. Still a pure
-# per-row map with NO shuffle at any corpus size; the tokenize/count core is
-# one vectorized Arrow kernel (the old all-Catalyst form folded interpreted
-# lambdas per token — see with_repetition's docstring for the measured 6×),
-# returning exact integers so every float stays in Catalyst. Long documents
-# are capped at MAX_REP_TOKENS tokens (the signals saturate long before
-# that; the cap bounds the per-row O(tokens) set/multiplicity pass).
+# per-row map with NO shuffle at any corpus size; the tokenize/count core
+# below runs inside lexical_counts_udf and returns exact integers, so every
+# float stays in Catalyst. Long documents are capped at MAX_REP_TOKENS
+# tokens (the signals saturate long before that; the cap bounds the per-row
+# O(tokens) set/multiplicity pass).
 # ---------------------------------------------------------------------------
 
 MAX_REP_TOKENS = 10_000
@@ -459,72 +597,52 @@ REP_MAX_DUP_2GRAM_FRAC = 0.10
 REP_MAX_TOP_WORD_FRAC = 0.12
 
 
-def _rep_words(text: Column) -> Column:
-    return F.when(F.trim(text) == "", F.array().cast("array<string>")).otherwise(
-        F.slice(F.split(F.trim(text), r"\s+"), 1, MAX_REP_TOKENS)
-    )
+def _rep_counts_kernel(text: pa.Array) -> np.ndarray:
+    """Repetition counts of one Arrow batch of documents, an (n, 7) int32
+    array of EXACT integers per doc: words, distinct words, 2-grams,
+    distinct 2-grams, 3-grams, distinct 3-grams, top word multiplicity, over
+    the first MAX_REP_TOKENS tokens. All float math (fractions, rounding)
+    stays in Catalyst, so the cross-engine float contract is untouched.
 
-
-# Java-regex \s is the 6 ASCII whitespace chars (no Unicode classes without
-# the flag); the explicit class below makes Python's re split byte-identical
-# to Spark's split(trim(text), '\\s+') — incl. the leading/trailing EMPTY
-# tokens Java keeps when the (space-only-)trimmed text starts/ends with a
-# tab/newline (pinned empirically + by test_extras.test_repetition_counts...)
-_REP_WS_RX = None  # compiled lazily on the executor (regex not serializable)
-
-
-def _rep_counts_kernel(texts):
-    """Vectorized repetition-counting core: EXACT integer counts per doc —
-    (n words, distinct words, n/distinct 2-grams, n/distinct 3-grams, max
-    word multiplicity) over the first MAX_REP_TOKENS tokens. All float math
-    (fractions, rounding) stays in Catalyst so the cross-engine float
-    contract is untouched; integers cannot drift."""
-    import re
-
-    from collections import Counter
-
-    global _REP_WS_RX
-    if _REP_WS_RX is None:
-        _REP_WS_RX = re.compile(r"[ \t\n\x0b\x0c\r]+")
-    split = _REP_WS_RX.split
-    rows = []
-    for s in texts:
-        t = s.strip(" ") if s is not None else ""
-        if t == "":
-            rows.append((0, 0, 0, 0, 0, 0, 0))
-            continue
-        toks = split(t)
-        if len(toks) > MAX_REP_TOKENS:
-            toks = toks[:MAX_REP_TOKENS]
-        nw = len(toks)
-        cnt = Counter(toks)
-        dw = len(cnt)
-        top = max(cnt.values())
-        if nw >= 2:
-            n2, d2 = nw - 1, len(set(zip(toks, toks[1:])))
-        else:
-            n2 = d2 = 0
-        if nw >= 3:
-            n3, d3 = nw - 2, len(set(zip(toks, toks[1:], toks[2:])))
-        else:
-            n3 = d3 = 0
-        rows.append((nw, dw, n2, d2, n3, d3, top))
-    return rows
-
-
-def _make_rep_counts_udf():
-    @F.pandas_udf("struct<nw:int,dw:int,n2:int,d2:int,n3:int,d3:int,top:int>")
-    def _rep_counts(texts: pandas.Series) -> pandas.DataFrame:
-        out = pandas.DataFrame(
-            _rep_counts_kernel(texts),
-            columns=["nw", "dw", "n2", "d2", "n3", "d3", "top"],
-        )
-        return out.astype("int32")
-
-    return _rep_counts
-
-
-_REP_COUNTS_UDF = None
+    Tokens are split(trim(text), '\\s+') byte for byte: trim drops spaces
+    only, and ascii_split_whitespace splits on runs of Java's 6 ASCII \\s
+    chars, keeping the empty edge tokens Java keeps when the trimmed text
+    starts or ends with a tab or newline. Blank and NULL docs count 0.
+    Distinctness is hashing, not a per-document loop: tokens get batch-wide
+    ids, (row, id) pairs get per-document word ids w, and the n-grams are
+    the pairs (w_j, w_j+1) and (bigram_j, w_j+2) that stay inside one row —
+    every key carries its row through w, so factorize counts per document.
+    Keys stay below (tokens in the batch)², inside int64 for any batch of
+    fewer than 3·10⁹ tokens."""
+    n = len(text)
+    out = np.zeros((n, len(_REP_FIELDS)), dtype=np.int32)
+    t = pc.utf8_trim(text, " ")
+    t = pc.if_else(pc.equal(t, ""), pa.scalar(None, pa.string()), t)
+    toks = pc.list_slice(pc.ascii_split_whitespace(t), 0, MAX_REP_TOKENS)
+    nw = pc.fill_null(pc.list_value_length(toks), 0).to_numpy().astype(np.int64)
+    if not nw.any():
+        return out
+    ids = pc.dictionary_encode(pc.list_flatten(toks)).indices.to_numpy().astype(np.int64)
+    row = np.repeat(np.arange(n, dtype=np.int64), nw)
+    v = int(ids.max()) + 1
+    w, words = pandas.factorize(row * v + ids)
+    u = len(words)
+    wrow = words // v  # row of each distinct word, nondecreasing
+    starts = np.flatnonzero(np.r_[True, wrow[1:] != wrow[:-1]])
+    same2 = row[1:] == row[:-1]
+    b, bigrams = pandas.factorize(w[:-1][same2] * u + w[1:][same2])
+    b_at = np.full(len(row), -1, dtype=np.int64)
+    b_at[:-1][same2] = b
+    same3 = row[2:] == row[:-2]
+    _, trigrams = pandas.factorize(b_at[:-2][same3] * u + w[2:][same3])
+    out[:, 0] = nw
+    out[:, 1] = np.bincount(wrow, minlength=n)
+    out[:, 2] = np.maximum(nw - 1, 0)
+    out[:, 3] = np.bincount(wrow[bigrams // u], minlength=n)
+    out[:, 4] = np.maximum(nw - 2, 0)
+    out[:, 5] = np.bincount(wrow[bigrams[trigrams // u] // u], minlength=n)
+    out[wrow[starts], 6] = np.maximum.reduceat(np.bincount(w, minlength=u), starts)
+    return out
 
 
 def _ngrams(words: Column, n: int) -> Column:
@@ -538,6 +656,33 @@ def _ngrams(words: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
+def _repetition_exprs() -> tuple[dict, Column]:
+    c = F.col(_SIG)
+
+    def dup_frac(dist: Column, n: Column) -> Column:
+        return _round6(F.when(n > 0, 1.0 - dist / n.cast("double")).otherwise(F.lit(0.0)))
+
+    top = F.when(c["nw"] > 0, c["top"].cast("double") / c["nw"]).otherwise(F.lit(0.0))
+    fracs = {
+        "dup_word_frac": dup_frac(c["dw"], c["nw"]),
+        "dup_2gram_frac": dup_frac(c["d2"], c["n2"]),
+        "dup_3gram_frac": dup_frac(c["d3"], c["n3"]),
+        "top_word_frac": _round6(top),
+    }
+    keep = (
+        (F.col("dup_word_frac") <= REP_MAX_DUP_WORD_FRAC)
+        & (F.col("dup_2gram_frac") <= REP_MAX_DUP_2GRAM_FRAC)
+        & (F.col("top_word_frac") <= REP_MAX_TOP_WORD_FRAC)
+    )
+    return fracs, keep
+
+
+def _repetition_cols(df: DataFrame) -> DataFrame:
+    """with_repetition's columns over a frame carrying the staged _SIG."""
+    fracs, keep = _cached_exprs(("repetition",), _repetition_exprs)
+    return df.withColumns(fracs).withColumn("rep_keep", keep)
+
+
 def with_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Repetition signals per document:
       dup_word_frac   1 - distinct/total words (0 for empty docs)
@@ -548,43 +693,13 @@ def with_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
     All fractions rounded to 6 dp (same cross-engine contract as
     with_quality).
 
-    The counting core (tokenize → distinct/ngram/multiplicity COUNTS) runs
-    in one vectorized Arrow batch kernel (guide §4.2: hand whole batches to
-    native-speed code instead of interpreted per-element lambdas): the old
-    all-Catalyst form built three per-row string arrays and folded a
-    struct-state lambda per token — measured ~9 s for 50k rendered
-    conversations at sf0.1 where the kernel form reads ~1.5 s, value-
-    identical (tokenization byte-matched to split(trim(text), '\\s+'),
-    pinned by test_extras + the oracle gate). Only exact INTEGERS cross the
-    boundary back; every float op (1 - distinct/total, top/total, 6-dp
-    round) stays in Catalyst, so the cross-engine float contract is
-    untouched. Scale shape unchanged: still a pure per-row map, no shuffle."""
-    df = _widen(df)
-    global _REP_COUNTS_UDF
-    if _REP_COUNTS_UDF is None:
-        _REP_COUNTS_UDF = _make_rep_counts_udf()
-    c = F.col("_rc")
-
-    def dup_frac(dist: Column, n: Column) -> Column:
-        return F.round(
-            F.when(n > 0, 1.0 - dist / n.cast("double")).otherwise(F.lit(0.0)), 6
-        )
-
-    top = F.when(c["nw"] > 0, c["top"].cast("double") / c["nw"]).otherwise(F.lit(0.0))
-    out = (
-        df.withColumn("_rc", _REP_COUNTS_UDF(F.col(text_col)))
-        .withColumn("dup_word_frac", dup_frac(c["dw"], c["nw"]))
-        .withColumn("dup_2gram_frac", dup_frac(c["d2"], c["n2"]))
-        .withColumn("dup_3gram_frac", dup_frac(c["d3"], c["n3"]))
-        .withColumn("top_word_frac", F.round(top, 6))
-        .drop("_rc")
-    )
-    return out.withColumn(
-        "rep_keep",
-        (F.col("dup_word_frac") <= REP_MAX_DUP_WORD_FRAC)
-        & (F.col("dup_2gram_frac") <= REP_MAX_DUP_2GRAM_FRAC)
-        & (F.col("top_word_frac") <= REP_MAX_TOP_WORD_FRAC),
-    )
+    The counts (words, distinct words, n/distinct 2- and 3-grams, top
+    multiplicity over the first MAX_REP_TOKENS tokens) come from
+    _rep_counts_kernel inside lexical_counts_udf: hashing over a whole
+    Arrow batch, no per-document Python loop. Tokenization is byte-matched
+    to split(trim(text), '\\s+'). Every float op stays in Catalyst. Still a
+    pure per-row map, no shuffle."""
+    return _repetition_cols(_stage_signals(df, text_col)).drop(_SIG)
 
 
 # ---------------------------------------------------------------------------
@@ -1335,23 +1450,35 @@ CURATE_MIN_TOKENS = 5
 CURATE_MAX_TOKENS = 100_000
 
 
-def _curate_checks() -> list:
-    """The fixed-order curation rule list (name, failed-condition) over the
-    signal columns — shared by corpus_curate and corpus_prepare so the rule
-    set has exactly one definition."""
-    return [
-        ("too_short", F.col("n_ws_tokens") < CURATE_MIN_TOKENS),
-        ("too_long", F.col("n_ws_tokens") > CURATE_MAX_TOKENS),
-        ("low_quality", F.col("quality_score") < CURATE_MIN_QUALITY),
-        ("repetitive", ~F.col("rep_keep")),
-        ("unknown_lang", F.col("pred_lang") == "und"),
-    ]
+def _curate_verdict() -> tuple[Column, Column]:
+    """(keep, reasons) over the signal columns from the fixed-order rule
+    list — shared by corpus_curate and corpus_prepare so the rule set has
+    exactly one definition. keep = passes ALL rules; reasons = comma-joined
+    failed-rule names in rule order, '' when kept."""
+
+    def build():
+        checks = [
+            ("too_short", F.col("n_ws_tokens") < CURATE_MIN_TOKENS),
+            ("too_long", F.col("n_ws_tokens") > CURATE_MAX_TOKENS),
+            ("low_quality", F.col("quality_score") < CURATE_MIN_QUALITY),
+            ("repetitive", ~F.col("rep_keep")),
+            ("unknown_lang", F.col("pred_lang") == "und"),
+        ]
+        reasons = F.concat(*[F.when(c, F.lit(n + ",")).otherwise(F.lit("")) for n, c in checks])
+        keep = None
+        for _, c in checks:
+            keep = ~c if keep is None else keep & ~c
+        return keep, F.regexp_replace(reasons, ",$", "")
+
+    return _cached_exprs(("verdict",), build)
 
 
 def _with_curate_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return with_repetition(
-        with_langid(with_quality(with_token_counts(df), text_col), text_col), text_col
-    )
+    """Token counts plus the quality, langid and repetition columns, with
+    the lexical-counts struct staged once so its kernel runs once per row."""
+    d = _stage_signals(with_token_counts(df, text_col), text_col)
+    d = _quality_cols(d, text_col, n_ws_col="n_ws_tokens")
+    return _repetition_cols(_langid_cols(d)).drop(_SIG)
 
 
 def corpus_curate(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -1359,19 +1486,14 @@ def corpus_curate(df: DataFrame, text_col: str = "text") -> DataFrame:
     keep = passes ALL rules; reasons = comma-joined failed-rule names in
     fixed order (too_short, too_long, low_quality, repetitive,
     unknown_lang), '' when kept."""
-    d = _with_curate_signals(df, text_col)
-    checks = _curate_checks()
-    reasons = F.concat(*[F.when(c, F.lit(n + ",")).otherwise(F.lit("")) for n, c in checks])
-    keep = None
-    for _, c in checks:
-        keep = ~c if keep is None else keep & ~c
-    return d.select(
+    keep, reasons = _curate_verdict()
+    return _with_curate_signals(df, text_col).select(
         "doc_id",
         "n_ws_tokens",
         "quality_score",
         "pred_lang",
         keep.alias("keep"),
-        F.regexp_replace(reasons, ",$", "").alias("reasons"),
+        reasons.alias("reasons"),
     )
 
 
@@ -1771,12 +1893,7 @@ def corpus_prepare(
         F.when(h < cut1, F.lit("train")).when(h < cut2, F.lit("val")).otherwise(F.lit("test"))
     )
 
-    checks = _curate_checks()
-    reasons = F.concat(*[F.when(c, F.lit(n + ",")).otherwise(F.lit("")) for n, c in checks])
-    curate_keep = None
-    for _, c in checks:
-        curate_keep = ~c if curate_keep is None else curate_keep & ~c
-
+    curate_keep, reasons = _curate_verdict()
     w = Window.partitionBy("_nfp")
     is_canonical = F.col("doc_id") == F.min("doc_id").over(w)
     return (
@@ -1789,7 +1906,7 @@ def corpus_prepare(
             "pred_lang",
             is_canonical.alias("is_canonical"),
             curate_keep.alias("curate_keep"),
-            F.regexp_replace(reasons, ",$", "").alias("reasons"),
+            reasons.alias("reasons"),
             split.alias("split"),
             (is_canonical & curate_keep).alias("keep"),
         )
@@ -2035,7 +2152,7 @@ def corpus_datacard(
     h = F.expr(
         f"cast(conv(substr(md5(concat('{salt}', ':', cast(doc_id as string))),1,8),16,10) as bigint)"
     )
-    d = with_quality(df).select(
+    d = _with_quality_jvm(df).select(
         "lang",
         F.when(h < cut1, F.lit("train"))
         .when(h < cut2, F.lit("val"))

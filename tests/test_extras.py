@@ -2,6 +2,8 @@
 deterministically augmented corpus, similarity top-k vs local numpy, text
 stats, multimodal stub determinism."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -139,6 +141,87 @@ def test_textstats_refuse_to_clobber_caller_columns(spark):
     df = spark.createDataFrame([(1, "the fox", 7)], ["doc_id", "text", "_q_ntok"])
     with pytest.raises(ValueError, match="'_q_ntok'"):
         textstats.with_quality(df)
+
+
+# Rows where engines, regex flavours or NULL handling can part ways. The
+# long row runs past MAX_REP_TOKENS, so the repetition cap is exercised.
+ADVERSARIAL_TEXTS = [
+    None,
+    "",
+    "   ",
+    "\tthe a\n",
+    "ÉThe und der éthe",  # RE2/DuckDB \b is ASCII; java.util.regex's is not
+    "The THE the, de la y el",
+    "“quoted” ¿qué? 日本語",
+    "İs",
+    " ".join(f"w{i % 7} the" for i in range(textstats.MAX_REP_TOKENS // 2 + 40)),
+]
+
+
+def test_textstats_adversarial_rows_match_oracle(spark):
+    """Token counts, quality, langid, repetition and the curation verdict
+    equal their oracle_extras replays in DuckDB, value for value, on the
+    adversarial rows above."""
+    import duckdb
+    import pyarrow as pa
+
+    from lumbermill_spark import oracle_extras as OE
+
+    rows = list(enumerate(ADVERSARIAL_TEXTS))
+    docs = pa.table(
+        {
+            "doc_id": pa.array([i for i, _ in rows], pa.int64()),
+            "text": pa.array([t for _, t in rows], pa.string()),
+        }
+    )
+    con = duckdb.connect()
+    con.register("documents", docs)
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    cases = [
+        (textstats.with_token_counts, OE.text_tokens(), ()),
+        (textstats.with_quality, OE.text_quality(), ()),
+        (textstats.with_langid, OE.text_langid(), ()),
+        (textstats.with_repetition, OE.text_repetition(), ()),
+        (textstats.corpus_curate, OE.corpus_curate(), ()),
+        # corpus_datacard's Python-free quality: Java lower-cases 'İ' to
+        # 'i' + U+0307, so that one row is out of its contract
+        (textstats._with_quality_jvm, OE.text_quality(), ("İs",)),
+    ]
+    bad = []
+    for op, sql, skip in cases:
+        rel = con.execute(sql)
+        cols = [d[0] for d in rel.description]
+        want = {r[0]: r for r in rel.fetchall()}
+        got = {r[0]: tuple(r) for r in op(df).select(*cols).collect()}
+        bad += [
+            (op.__name__, text if text is None else text[:24], got[i], want[i])
+            for i, text in rows
+            if got[i] != want[i] and text not in skip
+        ]
+    assert not bad
+
+
+def test_repetition_kernel_matches_split_and_reference(spark):
+    """The batch repetition kernel's word count equals Spark's
+    split(trim(text), '\\s+') token count (empty edge tokens from
+    tab/newline ends included), and all seven counts equal a per-document
+    reference; n-grams never span two documents of one batch."""
+    from collections import Counter
+
+    import pyarrow as pa
+
+    texts = ["\tthe a\n", "a\x0bb\x0cc", "  x  y  ", "one", "\n\n", "a\r\nb",
+             "a b a b a", "b a", "a a a a", "", None, "x\xa0y z"]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    n_ws = {r["doc_id"]: r["n_ws_tokens"] for r in textstats.with_token_counts(df).collect()}
+    got = textstats._rep_counts_kernel(pa.array(texts, pa.string())).tolist()
+    for i, text in enumerate(texts):
+        t = (text or "").strip(" ")
+        toks = re.split(r"[ \t\n\x0b\x0c\r]+", t) if t else []
+        g2, g3 = list(zip(toks, toks[1:])), list(zip(toks, toks[1:], toks[2:]))
+        top = max(Counter(toks).values(), default=0)
+        assert got[i] == [len(toks), len(set(toks)), len(g2), len(set(g2)), len(g3), len(set(g3)), top], text
+        assert got[i][0] == (n_ws[i] or 0), text
 
 
 def test_centroid_collect_is_capped(spark, embeds, monkeypatch):

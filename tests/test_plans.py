@@ -132,8 +132,8 @@ def test_repetition_and_redaction_are_pure_projections(spark):
     """The repetition signals and PII redaction are per-row projections: the
     ONLY exchange allowed is the conditional input-widening repartition on
     doc_id (textstats._widen — fires only on few-file scans, a no-op at real
-    file counts); any other shuffle here would be a scale bug. No Python
-    evaluation (all higher-order/regexp expressions stay JVM-side)."""
+    file counts); any other shuffle here would be a scale bug. Repetition
+    crosses to Python once, in one Arrow UDF; redaction stays JVM-side."""
     from lumbermill_spark.extras import textstats
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -144,10 +144,10 @@ def test_repetition_and_redaction_are_pure_projections(spark):
         plan = _plan(df)
         assert plan.count("Exchange") == plan.count("Exchange hashpartitioning(doc_id")
         assert plan.count("Exchange") <= 1
-        # repetition's counting core is ONE vectorized Arrow kernel (exact
-        # integer counts; float math stays in Catalyst) — still a pure
-        # per-row map, no shuffle; nothing else may cross to Python, and
-        # redaction stays entirely JVM-side
+        # repetition's counts come from ONE Arrow kernel (exact integers;
+        # float math stays in Catalyst) — still a pure per-row map, no
+        # shuffle; nothing else may cross to Python, and redaction stays
+        # entirely JVM-side
         assert plan.count("ArrowEvalPython") <= 1
         assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in _plan(
@@ -283,8 +283,8 @@ def test_conv_curate_single_exchange(spark):
     plan = _plan(convcorpus.curate_conversations(df))
     assert plan.count("Exchange") == 1
     assert "Join" not in plan
-    # exactly ONE Python node: the vectorized repetition-count kernel
-    # (integer counts only, riding render's exchange — no extra shuffle)
+    # exactly ONE Python node: the lexical-counts Arrow kernel (integer
+    # counts only, riding render's exchange — no extra shuffle)
     assert plan.count("ArrowEvalPython") == 1
     assert "BatchEvalPython" not in plan
 
@@ -550,3 +550,33 @@ def test_conv_redact_pure_projection(spark):
     plan = _plan(convcorpus.redact_turns(convcorpus.augment_turn_pii(df)))
     assert "Exchange" not in plan
     assert "Python" not in plan
+
+
+def test_corpus_curate_one_arrow_udf(spark):
+    """corpus_curate's lexical signals cross to Python once: ONE
+    ArrowEvalPython node holding ONE UDF (lexical_counts_udf), no row-at-a-
+    time Python, and no exchange besides _widen's doc_id repartition."""
+    from lumbermill_spark.extras import textstats
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    plan = _plan(textstats.corpus_curate(docs))
+    nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert len(nodes) == 1
+    assert nodes[0].count("pythonUDF") == 1 and "lexical_counts_udf(" in nodes[0]
+    assert "BatchEvalPython" not in plan
+    assert plan.count("Exchange") == plan.count("Exchange hashpartitioning(doc_id")
+    assert plan.count("Exchange") <= 1
+
+
+def test_survivor_joins_carry_no_broadcast_hint(spark):
+    """The dedup survivor set (pair ids re-attached to their text) has no
+    size bound, so neither LSH verifier may force it into a broadcast: the
+    analyzed plans carry no broadcast hint; the planner decides by size."""
+    from lumbermill_spark.extras import dedup
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    aug = dedup.augmented_docs(docs)
+    for op in (dedup.minhash_lsh_pairs, dedup.ngram_jaccard_pairs):
+        analyzed = op(aug, materialize=False)._jdf.queryExecution().analyzed().toString()
+        assert "ResolvedHint" not in analyzed, op.__name__
+        assert "broadcast" not in analyzed.lower(), op.__name__
